@@ -141,17 +141,24 @@ object Bench {
       (out, math.min(before, after))
     }
 
-    def force(name: String): Long = {
+    // wall nanos of one forced run, or None when the query failed: a
+    // failure's wall time says how fast it failed, never how fast the
+    // query runs, so it must not reach any total
+    def force(name: String): Option[Long] = {
       val t0 = System.nanoTime()
-      try SparkEntry.queries(name)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      val ok =
+        try {
+          SparkEntry.queries(name)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          true
+        } catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}")
+          false
+        }
       val dt = System.nanoTime() - t0
       Engine.releaseCaches(spark) // no cross-query cache pinning
       System.gc()
-      dt
+      if (ok) Some(dt) else None
     }
 
     // warm-up: session machinery + every table's footer/schema
@@ -255,11 +262,20 @@ object Bench {
     // actually sustained across it.
     // SPARK_GRAFT_SAMPLES overrides (1 = old single-shot behavior).
     val passes = sys.env.get("SPARK_GRAFT_SAMPLES").map(_.toInt).getOrElse(3)
-    val resultSamples = names.map { name =>
-      name -> (1 to passes).map { _ =>
-        bracketed(() => force(name) / 1e9)
-      }
+    // a query that fails any pass stops there and is left out of every
+    // total, dict and drift check; it is reported as failed instead
+    val resultSamples = names.flatMap { name =>
+      val ss = (1 to passes).iterator
+        .map(_ => bracketed(() => force(name)))
+        .takeWhile(_._1.isDefined)
+        .map { case (t, ratio) => (t.get / 1e9, ratio) }
+        .toVector
+      if (ss.length == passes) Some(name -> ss) else None
     }
+    val failed = names.filterNot(resultSamples.map(_._1).toSet)
+    if (failed.nonEmpty) System.err.println(
+      s"[bench] ${failed.length} queries FAILED, left out of every total: " +
+      failed.mkString(", "))
     val results = resultSamples.map { case (n, ss) => n -> ss.map(_._1).min }
     // per-query: the min pass's raw seconds, its adjacent load ratio,
     // and the calibrated estimate raw/ratio (ratio >= 1, so
@@ -397,6 +413,7 @@ object Bench {
       s""""queries_spread":$spreadFull,""" +
       s""""min_regressions":$regressionsFull,""" +
       s""""min_regressions_format":"[prior_min, raw_min, load_ratio, calibrated_min]",""" +
+      s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""flagship_csv_groupby_sec":$csvSec,"flagship_csv_rows_per_sec":$csvRps,""" +
       s""""flagship_samples_sec":${samples.mkString("[", ",", "]")},""" +
       s""""flagship_load_ratios":${flagshipRatios.mkString("[", ",", "]")},""" +

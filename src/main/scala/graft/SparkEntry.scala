@@ -1354,37 +1354,25 @@ object SparkEntry {
     // gets a deterministic oracle (recall must be 1.0 at this SF)
     "d3_minhash_lsh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // one shingle explode feeds BOTH the LSH path and the exact
-      // ground truth — built once, persisted, shared
-      // r11: the index materializes PRE-HASHED — (id, shingle =
-      // xxhash64(s), h2 = xxhash64(1, s)), three longs instead of a
-      // shingle string (identical downstream values: the exact arm's
-      // join key IS xxhash64(s), and MinHash's two Carter-Wegman base
-      // hashes ARE (shingle, h2)). The doc-frequency cap runs BEFORE
-      // the key-partitioned materialization (guide §2.5: hot shingles
-      // never reach the shuffle that would concentrate them; its
-      // equality classes move from strings to 64-bit hashes — the
-      // hashedShingleIndex tradeoff, oracle-gated), and partitioning
-      // by `shingle` makes the exact arm's self-join exchange-free.
-      val rawIdx = operators.Materialize.eagerByKey(
-        Dedup.capDocFreq(
-          Dedup.shingleIndex(Dedup.fanOut(docs), "doc_id", "text", n = 3,
-              maxDocFreq = None, tokens = true)
-            .select(col("id"),
-              xxhash64(col("shingle")).as("shingle"),
-              xxhash64(lit(1), col("shingle")).as("h2")),
-          Some(50)),
+      // one shingle index feeds BOTH the LSH path and the exact ground
+      // truth — built once, materialized, shared. The doc-frequency
+      // cap runs inside the lazy index, before the key-partitioned
+      // materialization (hot shingles never reach the shuffle that
+      // would concentrate them), and partitioning by `shingle` makes
+      // the exact arm's self-join exchange-free.
+      val idx = operators.Materialize.eagerByKey(
+        Dedup.shingleIndex(operators.Materialize.fanOut(docs), "doc_id",
+          "text", n = 3, maxDocFreq = Some(50), tokens = true),
         col("shingle"))
       // UNVERIFIED candidates are enough for recall-vs-exact: the
       // verified set is cand ∩ {jaccard≥0.8} and exact IS
       // {jaccard≥0.8}, so exact ∩ verified(cand) = exact ∩ cand — a
       // separate verify pipeline (2 hash joins + 3 aggregates) would
       // recompute what the exact path below already computes
-      val lsh = Dedup.minhashLshCandidatesFromIndex(rawIdx,
+      val lsh = Dedup.minhashLshCandidatesFromIndex(idx,
         k = 32, bands = 4)
-      val exact = Dedup.ngramJaccardPairsFromIndex(
-        rawIdx.select(col("id"), col("shingle")),
-        threshold = 0.8).select("id_a", "id_b")
+      val exact = Dedup.ngramJaccardPairsFromIndex(idx, threshold = 0.8)
+        .select("id_a", "id_b")
         // referenced twice below (n_exact + the semi-join probe):
         // materialize the small pair list so the exact pipeline — the
         // expensive half of this query — runs once (r10)
@@ -3240,18 +3228,13 @@ object SparkEntry {
     // each contributing exactly `bands` (4) index rows.
     "d19_index_build" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // pre-hashed (shingle, h2) index, cap before the keyed shuffle
-      // (r11: see d3_minhash_lsh)
-      val rawIdx = operators.Materialize.eagerByKey(
-        Dedup.capDocFreq(
-          Dedup.shingleIndex(Dedup.fanOut(docs), "doc_id", "text", n = 3,
-              maxDocFreq = None, tokens = true)
-            .select(col("id"),
-              xxhash64(col("shingle")).as("shingle"),
-              xxhash64(lit(1), col("shingle")).as("h2")),
-          Some(50)),
+      // the shared shingle index, capped before the keyed shuffle
+      // (see d3_minhash_lsh)
+      val idx = operators.Materialize.eagerByKey(
+        Dedup.shingleIndex(operators.Materialize.fanOut(docs), "doc_id",
+          "text", n = 3, maxDocFreq = Some(50), tokens = true),
         col("shingle"))
-      val banded = Dedup.bandSignatures(rawIdx, k = 32, bands = 4)
+      val banded = Dedup.bandSignatures(idx, k = 32, bands = 4)
       graft.sources.Sink.writeBucketed(banded.filter(!(col("id") % 10 === 0)),
         d19IndexTable(dir), Seq("band", "sig"), numBuckets = 8,
         sortCols = Seq("band", "sig"))
@@ -3271,19 +3254,14 @@ object SparkEntry {
     // it IS the output the oracle checks).
     "d19_index_probe" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      // pre-hashed (shingle, h2) index, cap before the keyed shuffle
-      // (r11: see d3_minhash_lsh)
-      val rawIdx = operators.Materialize.eagerByKey(
-        Dedup.capDocFreq(
-          Dedup.shingleIndex(Dedup.fanOut(docs), "doc_id", "text", n = 3,
-              maxDocFreq = None, tokens = true)
-            .select(col("id"),
-              xxhash64(col("shingle")).as("shingle"),
-              xxhash64(lit(1), col("shingle")).as("h2")),
-          Some(50)),
+      // the shared shingle index, capped before the keyed shuffle
+      // (see d3_minhash_lsh)
+      val idx = operators.Materialize.eagerByKey(
+        Dedup.shingleIndex(operators.Materialize.fanOut(docs), "doc_id",
+          "text", n = 3, maxDocFreq = Some(50), tokens = true),
         col("shingle"))
       val banded = operators.Materialize.eager(
-        Dedup.bandSignatures(rawIdx, k = 32, bands = 4)) // index write + probe + caps share it
+        Dedup.bandSignatures(idx, k = 32, bands = 4)) // index write + probe + caps share it
       val isBatch = col("id") % 10 === 0
       // ingest wrote the bucketed index (d19_index_build runs first in
       // Bench/Verify name order); build it here only if probed
@@ -3308,9 +3286,7 @@ object SparkEntry {
         .select(least(col("pid"), col("cid")).as("id_a"),
           greatest(col("pid"), col("cid")).as("id_b"))
         .distinct()
-      val exact = Dedup.ngramJaccardPairsFromIndex(
-          rawIdx.select(col("id"), col("shingle")),
-          threshold = 0.8)
+      val exact = Dedup.ngramJaccardPairsFromIndex(idx, threshold = 0.8)
         .filter((col("id_a") % 10 === 0) =!= (col("id_b") % 10 === 0))
         .select("id_a", "id_b")
         // referenced twice (count + semi-join probe): materialize the

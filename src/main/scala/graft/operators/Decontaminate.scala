@@ -31,9 +31,9 @@ object Decontaminate {
     * word `n`-gram shingles, how many also occur anywhere in
     * `benchmark`. Returns `(doc_id, n_shingles, n_contam,
     * contam_frac)` with one row per corpus document (clean docs score
-    * 0). Shingles are 64-bit-hashed before comparison, as in
-    * [[Dedup.ngramJaccardPairs]]: same equality classes w.h.p., a
-    * fraction of the shuffle bytes.
+    * 0). Shingles are compared by their [[Dedup.shingleIndex]] 64-bit
+    * hashes: same equality classes w.h.p., a fraction of the shuffle
+    * bytes.
     *
     * `bloomPrefilter=false` skips the Bloom phase (exact join only) —
     * the differential-test reference; results are identical by
@@ -53,10 +53,10 @@ object Decontaminate {
              bloomExpectedItems: Long = -1L): DataFrame = {
     val corpusIdx = Materialize.eager(
       Dedup.shingleIndex(corpus, idCol, textCol, n, None, tokens)
-        .select(col("id"), xxhash64(col("shingle")).as("h")))
+        .select(col("id"), col("shingle").as("h")))
     val benchSet = Materialize.eager(
       Dedup.shingleIndex(benchmark, idCol, textCol, n, None, tokens)
-        .select(xxhash64(col("shingle")).as("h")).distinct())
+        .select(col("shingle").as("h")).distinct())
 
     val candidates =
       if (bloomPrefilter) bloomFiltered(corpusIdx, benchSet, bloomExpectedItems)
@@ -100,10 +100,10 @@ object Decontaminate {
                  bloomExpectedItems: Long = -1L): DataFrame = {
     val corpusIdx = Materialize.eager(
       Dedup.shingleIndex(corpus, idCol, textCol, n, None, tokens)
-        .select(col("id").as("id_a"), xxhash64(col("shingle")).as("h")))
+        .select(col("id").as("id_a"), col("shingle").as("h")))
     val benchIdx = Materialize.eager(
       Dedup.shingleIndex(benchmark, idCol, textCol, n, None, tokens)
-        .select(col("id").as("id_b"), xxhash64(col("shingle")).as("h")))
+        .select(col("id").as("id_b"), col("shingle").as("h")))
     // full per-doc sizes BEFORE any prefilter — the Jaccard denominator
     // counts all of a doc's shingles, not just benchmark-overlapping ones
     val szA = corpusIdx.groupBy("id_a").agg(count(lit(1)).as("sz_a"))

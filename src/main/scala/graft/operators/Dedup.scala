@@ -13,6 +13,13 @@ import org.apache.spark.sql.types.{DecimalType, LongType}
   * comparison never materializes. Frequent-key caps bound worst-case
   * fanout on skewed corpora (a shingle occurring in k docs yields k²
   * candidate pairs — cap k).
+  *
+  * One shingle index serves the whole shingle family (Jaccard,
+  * containment, substring spans, MinHash, banding, LSH): [[shingleIndex]]
+  * builds `(id, shingle: bigint = xxhash64(s), h2: bigint =
+  * xxhash64(1, s))` once — the text is hashed there and nowhere else —
+  * and every consumer reads its columns by name, so column order and
+  * extra columns never change a result.
   */
 object Dedup {
 
@@ -79,51 +86,38 @@ object Dedup {
   private[graft] def shinglesOf(text: Column, n: Int, tokens: Boolean): Column =
     if (tokens) tokenShingles(text, n) else shingles(text, n)
 
-  /** Expand-only fan-out — moved to [[Materialize.fanOut]] (r11
-    * consolidation with SparkEntry's duplicate); kept as a forwarder
-    * for the operator-local call sites.
-    */
-  private[graft] def fanOut(df: DataFrame): DataFrame = Materialize.fanOut(df)
-
-  /** (id, shingle) inverted index, optionally dropping shingles that
-    * occur in more than `maxDocFreq` docs (skew control at scale).
+  /** THE shingle index of the dedup family — every shingle-based
+    * operator (Jaccard, containment, substring spans, MinHash, banding,
+    * LSH) reads this one shape, built once per corpus:
+    * `(id, shingle: bigint, h2: bigint)`, one row per distinct shingle
+    * `s` of each document, with `shingle = xxhash64(s)` (the equality
+    * key of every self-join) and `h2 = xxhash64(1, s)` (MinHash's
+    * second Carter-Wegman base hash). 64-bit hashes keep the string
+    * equality classes w.h.p. (collision odds ~n²/2⁶⁴) at a fraction of
+    * the shuffle bytes, and the text is hashed exactly once.
+    *
+    * Lazy: callers feeding several consumers materialize it
+    * (`Materialize.eagerByKey(_, col("shingle"))` for the self-joins),
+    * and consumers that compute no signatures select `id, shingle`
+    * first so `h2` is pruned before any materialization.
+    *
+    * `maxDocFreq` drops shingles that occur in more than that many
+    * docs ([[capDocFreq]]) on the hash, inside this lazy plan — so a
+    * keyed materialization never ships the occurrences of a hot
+    * (boilerplate) shingle into one partition. The cap's frequency
+    * aggregate reads the lazy explode with map-side partial
+    * aggregation as a broadcast subtree of the same job.
     */
   def shingleIndex(df: DataFrame, idCol: String, textCol: String, n: Int,
                    maxDocFreq: Option[Int] = None,
                    tokens: Boolean = false): DataFrame = {
-    val idx = df.select(col(idCol).as("id"),
-        explode(shinglesOf(col(textCol), n, tokens)).as("shingle"))
+    val s = col("__s")
+    val idx = df
+      .select(col(idCol).as("id"),
+        explode(shinglesOf(col(textCol), n, tokens)).as("__s"))
+      .select(col("id"), xxhash64(s).as("shingle"),
+        xxhash64(lit(1), s).as("h2"))
     capDocFreq(idx, maxDocFreq)
-  }
-
-  /** The shared index-build prelude of the pair operators: hash the
-    * shingles to 64 bits (same equality classes w.h.p., a fraction of
-    * the shuffle bytes), drop doc-frequency-capped hot shingles, then
-    * materialize hash-partitioned BY THE JOIN KEY (guide §2.4 "two
-    * operations keyed the same way can share one exchange") — the
-    * sizes aggregate and both self-join sides all key on `shingle`,
-    * and the checkpoint's LogicalRDD preserves outputPartitioning, so
-    * the one shuffle paid here replaces every consumer-side exchange.
-    * One place to change the hashing/persistence discipline.
-    *
-    * SKEW ORDER (r11, VERDICT r10 task 2 / guide §2.5): the cap runs
-    * BEFORE the key-repartition, so every occurrence of a hot shingle
-    * (a boilerplate span in ~all docs) is dropped before the shuffle
-    * that would concentrate it into one partition at materialization.
-    * The cap's frequency aggregate reads the lazy explode with
-    * map-side partial aggregation (the skew-absorbing shape) as a
-    * broadcast subtree of the SAME materialization job — the explode
-    * is evaluated twice inside that one job (bounded; no cross-query
-    * cold-cache race, which was the r10 problem), and hot rows are
-    * never materialized or shuffled at all.
-    */
-  private[graft] def hashedShingleIndex(df: DataFrame, idCol: String,
-                                        textCol: String, n: Int,
-                                        tokens: Boolean,
-                                        maxDocFreq: Option[Int] = None): DataFrame = {
-    val hashed = shingleIndex(fanOut(df), idCol, textCol, n, None, tokens)
-      .select(col("id"), xxhash64(col("shingle")).as("shingle"))
-    Materialize.eagerByKey(capDocFreq(hashed, maxDocFreq), col("shingle"))
   }
 
   /** Drop index entries whose shingle occurs in more than `cap` docs —
@@ -131,8 +125,6 @@ object Dedup {
     * docs contributes k² candidate pairs; boilerplate spans push k to
     * corpus scale). The heavy-hitter list is bounded by |index| / cap,
     * so it broadcasts; the kept set (~vocabulary-sized) never moves.
-    * Call on a persisted index: the doc-frequency aggregate and the
-    * anti-join probe both re-read the cache instead of re-exploding.
     */
   def capDocFreq(idx: DataFrame, cap: Option[Int]): DataFrame = cap match {
     case None => idx
@@ -146,9 +138,8 @@ object Dedup {
       // turns the pair into a `[graft] capDocFreq ...` log line; specs
       // read queryExecution.observedMetrics directly.
       val tag = capObsCounter.incrementAndGet()
-      // re-select in the input's column order: a USING join moves the
-      // key to the front, which would silently break downstream
-      // positional renames (toDF)
+      // re-select in the input's column order (a USING join moves the
+      // key to the front)
       idx.observe(s"graft_cap_in_${tag}_$c", count(lit(1)).as("n"))
         .join(broadcast(hot), Seq("shingle"), "left_anti")
         .select(idx.columns.map(col).toIndexedSeq: _*)
@@ -173,7 +164,9 @@ object Dedup {
                         maxDocFreq: Option[Int] = None,
                         tokens: Boolean = false): DataFrame =
     ngramJaccardPairsFromIndex(
-      hashedShingleIndex(df, idCol, textCol, n, tokens, maxDocFreq),
+      Materialize.eagerByKey(shingleIndex(Materialize.fanOut(df), idCol,
+          textCol, n, maxDocFreq, tokens).select("id", "shingle"),
+        col("shingle")),
       threshold)
 
   /** Asymmetric near-dup: shingle containment `C(A→B) = |A∩B| / |A|` —
@@ -183,25 +176,58 @@ object Dedup {
     * Returns DIRECTED pairs `(id_a, id_b, containment)` with
     * containment of A in B at or above `threshold`.
     *
-    * Scale shape: the d2 inverted index verbatim — per-doc-distinct
-    * hashed shingles, key-partitioned self-join, `maxDocFreq` skew cap
-    * — only the denominator changes (|A| instead of the union).
+    * Scale shape: the d2 inverted index verbatim — the key-partitioned
+    * [[shingleIndex]] self-join with its `maxDocFreq` skew cap — only
+    * the denominator changes (|A| instead of the union).
     */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
                        n: Int, threshold: Double,
                        maxDocFreq: Option[Int] = None,
                        tokens: Boolean = false): DataFrame = {
-    val capped = hashedShingleIndex(df, idCol, textCol, n, tokens, maxDocFreq)
-    val sizes = capped.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = capped.toDF("id_a", "shingle")
-      .join(capped.toDF("id_b", "shingle"), "shingle")
-      .filter(col("id_a") =!= col("id_b")) // directed: both orders kept
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common.join(sizes.toDF("id_a", "sz_a"), "id_a")
-      .withColumn("containment",
-        col("n_common").cast("double") / col("sz_a").cast("double"))
+    val idx = Materialize.eagerByKey(shingleIndex(Materialize.fanOut(df),
+        idCol, textCol, n, maxDocFreq, tokens).select("id", "shingle"),
+      col("shingle"))
+    val sizes = idx.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    sharedShingles(idx, directed = true)
+      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sz_a")), "id_a")
+      .select(col("id_a"), col("id_b"),
+        (col("n_common").cast("double") / col("sz_a").cast("double"))
+          .as("containment"))
       .filter(col("containment") >= threshold)
-      .select("id_a", "id_b", "containment")
+  }
+
+  /** Per-pair shared-shingle counts `(id_a, id_b, n_common)` from the
+    * inverted-index self-join on `shingle`: pairs only for docs sharing
+    * at least one shingle, never all-pairs. Undirected pairs keep
+    * `id_a < id_b`; `directed` keeps both orders.
+    */
+  private def sharedShingles(idx: DataFrame,
+                             directed: Boolean = false): DataFrame =
+    idx.select(col("id").as("id_a"), col("shingle"))
+      .join(idx.select(col("id").as("id_b"), col("shingle")), "shingle")
+      .filter(if (directed) col("id_a") =!= col("id_b")
+        else col("id_a") < col("id_b"))
+      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
+
+  /** Jaccard `|A∩B| / |A∪B|` from the intersection and both set sizes. */
+  private def jaccard(nCommon: Column, szA: Column, szB: Column): Column =
+    nCommon.cast("double") / (szA + szB - nCommon).cast("double")
+
+  /** `(id_a, id_b, jaccard)` at or above `threshold`, from per-pair
+    * intersection counts `(id_a, id_b, n_common)` and the index's
+    * per-doc distinct-shingle counts. The sizes have one row per
+    * document: never force a broadcast (O(corpus) driver memory at
+    * scale) — AQE broadcasts them when they actually fit.
+    */
+  private def jaccardPairs(common: DataFrame, idx: DataFrame,
+                           threshold: Double): DataFrame = {
+    val sizes = idx.groupBy("id").agg(count(lit(1)).as("n_sh"))
+    common
+      .join(sizes.select(col("id").as("id_a"), col("n_sh").as("sz_a")), "id_a")
+      .join(sizes.select(col("id").as("id_b"), col("n_sh").as("sz_b")), "id_b")
+      .select(col("id_a"), col("id_b"),
+        jaccard(col("n_common"), col("sz_a"), col("sz_b")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** Set-similarity join via PREFIX FILTERING (Chaudhuri et al. 2006;
@@ -242,7 +268,7 @@ object Dedup {
     // quadratic in clone-family sizes (measured at sf0.1: 2.97M true
     // word-level pairs vs 256 shingle-level). Phrase-level sets are
     // what near-dup dedup actually compares (d2's shingle index).
-    val fdocs = fanOut(docs)
+    val fdocs = Materialize.fanOut(docs)
     val raw =
       if (shingleN == 1)
         fdocs.select(col(idCol).as("id"),
@@ -283,8 +309,10 @@ object Dedup {
     // all-integer, still lossless, and it cuts the verify-join input
     // on clone-heavy data where the length filter alone passes
     // everything.
-    val cands = prefix.toDF("doc_a", "tok", "na", "pa")
-      .join(prefix.toDF("doc_b", "tok", "nb", "pb"), "tok")
+    val cands = prefix.select(col("id").as("doc_a"), col("tok"),
+        col("n").as("na"), col("rn").as("pa"))
+      .join(prefix.select(col("id").as("doc_b"), col("tok"),
+        col("n").as("nb"), col("rn").as("pb")), "tok")
       .filter(col("doc_a") < col("doc_b") &&
         lit(tDen) * col("na") >= lit(tNum) * col("nb") &&
         lit(tDen) * col("nb") >= lit(tNum) * col("na"))
@@ -298,12 +326,13 @@ object Dedup {
     // exact verify on candidates only: intersection by re-joining the
     // full token sets of each side
     val inter = cands
-      .join(toks.toDF("doc_a", "tok"), "doc_a")
-      .join(toks.toDF("doc_b", "tok"), Seq("doc_b", "tok"))
+      .join(toks.select(col("id").as("doc_a"), col("tok")), "doc_a")
+      .join(toks.select(col("id").as("doc_b"), col("tok")),
+        Seq("doc_b", "tok"))
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_inter"))
     inter
-      .join(sizes.toDF("doc_a", "na"), "doc_a")
-      .join(sizes.toDF("doc_b", "nb"), "doc_b")
+      .join(sizes.select(col("id").as("doc_a"), col("n").as("na")), "doc_a")
+      .join(sizes.select(col("id").as("doc_b"), col("n").as("nb")), "doc_b")
       .filter(lit(tDen + tNum) * col("n_inter") >=
         lit(tNum) * (col("na") + col("nb")))
       .select(col("doc_a"), col("doc_b"), col("n_inter"),
@@ -325,10 +354,9 @@ object Dedup {
     * never all-pairs. The length filter tDen·nB ≥ tNum·nA is implied
     * by containment (|A∩B| ≤ nB) and rides the join; exact verify
     * intersects per-doc 64-bit token arrays on candidates only
-    * (array_intersect — |cands| rows, not |cands|·doc-len exploded
-    * rows). All-integer thresholds, LOSSLESS end to end (64-bit-hash
-    * equality classes, the hashedShingleIndex tradeoff) — gated
-    * against the brute-force directed-pair oracle (d26).
+    * ([[verifyOverlap]]). All-integer thresholds, LOSSLESS end to end
+    * (64-bit-hash equality classes, the [[shingleIndex]] tradeoff) —
+    * gated against the brute-force directed-pair oracle (d26).
     */
   def containmentPrefixPairs(docs: DataFrame, tNum: Int, tDen: Int,
                        idCol: String = "doc_id", textCol: String = "text",
@@ -339,10 +367,10 @@ object Dedup {
     // this operator persists two full token relations and re-joins the
     // verify twice — shuffling longs instead of 3-token strings cuts
     // the shuffle bytes ~5x. Same equality classes w.h.p. (the
-    // hashedShingleIndex tradeoff, identical to d2's); the global
+    // shingleIndex tradeoff, identical to d2's); the global
     // rarity order becomes (df, hash) — still a total order shared by
     // both sides, which is all the PPJoin positional algebra needs.
-    val toks = Materialize.eager(fanOut(docs)
+    val toks = Materialize.eager(Materialize.fanOut(docs)
       .select(col(idCol).as("id"),
         split(trim(col(textCol)), "\\s+").as("ts"))
       .filter(size(col("ts")) >= shingleN)
@@ -396,25 +424,32 @@ object Dedup {
         (lit(1L) + least(col("na") - col("pa"), col("nb") - col("pb"))) >=
         lit(tNum) * col("na"))
       .select("doc_a", "doc_b")
-    // exact verify on candidates via per-doc token ARRAYS and the
-    // codegen'd array_intersect, not by re-exploding the inverted
-    // index: on duplicate-heavy corpora (the 10x scale-soak makes
-    // every doc a 10-clique) candidates legitimately number in the
-    // millions, and the exploded verify shuffles |cands| x avg-doc-len
-    // rows (billions) into a groupBy. The array form joins |cands|
-    // rows against one doc-array relation — the same intersection
-    // counts (toks is per-doc distinct), a fraction of the shuffle.
-    val docArrays = toks.groupBy("id")
-      .agg(collect_list(col("tok")).as("toks"))
+    verifyOverlap(cands, "doc_a", "doc_b", toks)
+      .filter(lit(tDen) * col("n_inter") >= lit(tNum) * col("n_a"))
+  }
+
+  /** Exact set overlap of candidate pairs `(a, b)` over a per-doc
+    * distinct `(id, tok: bigint)` relation, via per-doc token ARRAYS
+    * and the codegen'd array_intersect — not by re-exploding the
+    * inverted index: on duplicate-heavy corpora (the 10x scale-soak
+    * makes every doc a 10-clique) candidates legitimately number in
+    * the millions, and the exploded verify shuffles |cands| x
+    * avg-doc-len rows (billions) into a groupBy. The array form joins
+    * |cands| rows against one doc-array relation — the same
+    * intersection counts, a fraction of the shuffle.
+    * Returns `(a, b, n_inter, n_a, n_b)`.
+    */
+  private def verifyOverlap(cands: DataFrame, a: String, b: String,
+                            toks: DataFrame): DataFrame = {
+    val arrays = toks.groupBy("id").agg(collect_list(col("tok")).as("toks"))
     cands
-      .join(docArrays.toDF("doc_a", "toks_a"), "doc_a")
-      .join(docArrays.toDF("doc_b", "toks_b"), "doc_b")
-      .select(col("doc_a"), col("doc_b"),
+      .join(arrays.select(col("id").as(a), col("toks").as("toks_a")), a)
+      .join(arrays.select(col("id").as(b), col("toks").as("toks_b")), b)
+      .select(col(a), col(b),
         size(array_intersect(col("toks_a"), col("toks_b")))
           .cast("long").as("n_inter"),
         size(col("toks_a")).cast("long").as("n_a"),
         size(col("toks_b")).cast("long").as("n_b"))
-      .filter(lit(tDen) * col("n_inter") >= lit(tNum) * col("n_a"))
   }
 
   /** Exact substring-span duplication (Lee et al. 2021, "Deduplicating
@@ -425,56 +460,30 @@ object Dedup {
     * as 50−n+1 shared spans, so ranking by `n_shared` surfaces the
     * worst offenders first.
     *
-    * Scale shape: identical to the Jaccard inverted index — one
-    * codegen'd TokenShingles explode (per-doc distinct), 64-bit hashed
-    * spans, key-partitioned self-join (never all-pairs), `maxDocFreq`
-    * cap against boilerplate spans that would blow up the bucket join.
+    * Scale shape: identical to the Jaccard inverted index — the
+    * key-partitioned [[shingleIndex]] self-join (never all-pairs) over
+    * token spans, `maxDocFreq` cap against boilerplate spans that would
+    * blow up the bucket join.
     */
   def substringDupPairs(docs: DataFrame, idCol: String = "doc_id",
                         textCol: String = "text", n: Int = 8,
                         minShared: Int = 1,
-                        maxDocFreq: Option[Int] = None): DataFrame = {
-    val idx = hashedShingleIndex(docs, idCol, textCol, n, tokens = true,
-        maxDocFreq)
-      .select(col("id"), col("shingle").as("h"))
-    val a = idx.toDF("id_a", "h")
-    val b = idx.toDF("id_b", "h")
-    a.join(b, "h")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_shared"))
+                        maxDocFreq: Option[Int] = None): DataFrame =
+    sharedShingles(Materialize.eagerByKey(
+        shingleIndex(Materialize.fanOut(docs), idCol, textCol, n,
+          maxDocFreq, tokens = true).select("id", "shingle"),
+        col("shingle")))
+      .withColumnRenamed("n_common", "n_shared")
       .filter(col("n_shared") >= minShared)
-  }
 
-  /** Jaccard pairs from a prebuilt `(id, shingle: long)` inverted index
-    * — callers that also feed MinHash from the same shingles (d3's
-    * recall query) build the explode once and share it.
-    *
-    * The index feeds three consumers (sizes + both join sides): persist
-    * once instead of recomputing the explode per consumer. At data-lake
-    * scale this materialization would be a checkpoint table; the shape
-    * (build index once, self-join on shingle) is the same. Shingles are
-    * hashed to 64-bit before the self-join: same equality classes
-    * w.h.p. (collision odds ~n²/2⁶⁴), a fraction of the shuffle bytes.
+  /** Jaccard pairs from a prebuilt [[shingleIndex]] (read by name:
+    * `id`, `shingle`) — callers that also feed MinHash from the same
+    * index (d3's recall query) build it once and share it. The index
+    * feeds three consumers (sizes + both self-join sides), so callers
+    * materialize it keyed on `shingle`.
     */
-  def ngramJaccardPairsFromIndex(idx: DataFrame, threshold: Double): DataFrame = {
-    val sizes = idx.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val a = idx.toDF("id_a", "shingle")
-    val b = idx.toDF("id_b", "shingle")
-    val common = a.join(b, "shingle")
-      .filter(col("id_a") < col("id_b"))
-      .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    // sizes has one row per document: never force a broadcast (O(corpus)
-    // driver memory at scale) — AQE broadcasts when it actually fits,
-    // shuffle-joins otherwise (round-1 ADVICE)
-    common
-      .join(sizes.toDF("id_a", "sz_a"), "id_a")
-      .join(sizes.toDF("id_b", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double")
-          / (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
-  }
+  def ngramJaccardPairsFromIndex(idx: DataFrame, threshold: Double): DataFrame =
+    jaccardPairs(sharedShingles(idx), idx, threshold)
 
   /** d22's candidate generator: [[ngramJaccardPairs]] with a length
     * window pushed INTO the inverted-index self-join. Edit distance ≤ k
@@ -498,70 +507,41 @@ object Dedup {
                                   threshold: Double, maxLenDiff: Int,
                                   maxDocFreq: Option[Int] = None,
                                   tokens: Boolean = false): DataFrame = {
-    val raw = fanOut(df).select(col(idCol).as("id"),
+    val raw = Materialize.fanOut(df).select(col(idCol).as("id"),
         length(col(textCol)).cast(LongType).as("len"),
-        explode(shinglesOf(col(textCol), n, tokens)).as("shingle"))
-      .select(col("id"), col("len"), xxhash64(col("shingle")).as("shingle"))
-    // cap BEFORE the key-partitioned materialization (r11): see
-    // hashedShingleIndex — hot shingles never reach the keyed shuffle
+        explode(shinglesOf(col(textCol), n, tokens)).as("s"))
+      .select(col("id"), col("len"), xxhash64(col("s")).as("shingle"))
+    // cap BEFORE the key-partitioned materialization (as in
+    // shingleIndex): hot shingles never reach the keyed shuffle
     val capped = Materialize.eagerByKey(
       capDocFreq(raw, maxDocFreq), col("shingle"))
-    val sizes = capped.groupBy("id").agg(count(lit(1)).as("n_sh"))
-    val common = capped.toDF("id_a", "len_a", "shingle")
-      .join(capped.toDF("id_b", "len_b", "shingle"), "shingle")
+    val common = capped.select(col("id").as("id_a"), col("len").as("len_a"),
+        col("shingle"))
+      .join(capped.select(col("id").as("id_b"), col("len").as("len_b"),
+        col("shingle")), "shingle")
       .filter(col("id_a") < col("id_b") &&
         abs(col("len_a") - col("len_b")) <= maxLenDiff)
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("n_common"))
-    common
-      .join(sizes.toDF("id_a", "sz_a"), "id_a")
-      .join(sizes.toDF("id_b", "sz_b"), "id_b")
-      .withColumn("jaccard",
-        col("n_common").cast("double")
-          / (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
-      .filter(col("jaccard") >= threshold)
-      .select("id_a", "id_b", "jaccard")
+    jaccardPairs(common, capped, threshold)
   }
 
   // ---- MinHash + LSH -------------------------------------------------
 
-  /** MinHash signature: k permutations from TWO base hashes via the
-    * Carter-Wegman construction h_i = h1 + i·h2 (mod 2⁶⁴) — 2 hash
-    * evaluations per shingle instead of k (16× less hashing at k=32,
-    * the dominant map-side cost), with the standard pairwise-
-    * independence guarantee MinHash needs. One explode + one groupBy —
-    * two narrow shuffles total.
+  /** MinHash signatures from a [[shingleIndex]], as one
+    * `sig: array<bigint>` column of length k. k permutations come from
+    * the index's TWO base hashes via the Carter-Wegman construction
+    * h_i = shingle + i·h2 (mod 2⁶⁴) — the standard pairwise-independence
+    * guarantee MinHash needs, with the hashing already paid once at
+    * index build. One [[graft.plans.MinHashAgg]] buffer instead of k
+    * separate min aggregate columns, so the partial-aggregation row
+    * through the shuffle is one blob and the plan width is
+    * k-independent (matters at production k of 128-256 permutations).
     */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, k: Int, tokens: Boolean = false): DataFrame =
-    minhashSignaturesFromIndex(
-      shingleIndex(df, idCol, textCol, n, None, tokens), k)
-
-  /** Signatures from a prebuilt `(id, shingle: string)` index, as one
-    * `sig: array<bigint>` column of length k — a single
-    * [[graft.plans.MinHashAgg]] buffer instead of k separate min
-    * aggregate columns, so the partial-aggregation row through the
-    * shuffle is one blob and the plan width is k-independent (matters at
-    * production k of 128-256 permutations). Hash evaluation stays in the
-    * upstream codegen'd projection; the aggregate reads two long fields.
-    */
-  def minhashSignaturesFromIndex(rawIdx: DataFrame, k: Int): DataFrame = {
+  def minhashSignaturesFromIndex(idx: DataFrame, k: Int): DataFrame = {
     import org.apache.spark.sql.GraftSqlBridge
-    // r11: a PRE-HASHED index (id, shingle = xxhash64(s), h2 =
-    // xxhash64(1, s)) carries both Carter-Wegman base hashes as longs —
-    // the signature values are BIT-IDENTICAL (same hashes, computed in
-    // the index-build projection instead of here), but the
-    // materialized index is three fixed-width longs instead of a
-    // shingle string, so every consumer scan reads a fraction of the
-    // bytes. A plain (id, shingle: string) index hashes here as before.
-    val idx =
-      if (rawIdx.columns.contains("h2"))
-        rawIdx.withColumnRenamed("shingle", "h1")
-      else rawIdx
-        .withColumn("h1", xxhash64(col("shingle")))
-        .withColumn("h2", xxhash64(lit(1), col("shingle")))
     val agg = GraftSqlBridge.column(
       graft.plans.MinHashAgg(
-        GraftSqlBridge.expression(col("h1")),
+        GraftSqlBridge.expression(col("shingle")),
         GraftSqlBridge.expression(col("h2")), k)
         .toAggregateExpression(isDistinct = false))
     idx.groupBy("id").agg(agg.as("sig"))
@@ -578,42 +558,24 @@ object Dedup {
                       tokens: Boolean = true,
                       maxBucket: Int = 200,
                       maxDocFreq: Option[Int] = None): DataFrame =
+    // eager: signatures and the verify both read the index; both key on
+    // `id`, so the fan-width round-robin layout is kept (no keyed shuffle)
     minhashLshPairsFromIndex(
-      capDocFreq(
-        // eager PRE-HASHED index (r11): both Carter-Wegman base hashes
-        // are computed from the shingle strings in the one explode
-        // projection and materialized as three longs — identical
-        // signature/verify values, a fraction of the bytes per
-        // consumer scan. Fan-width round-robin partitioning keeps hot
-        // shingles spread at materialization (guide §2.5); the cap's
-        // equality classes move from strings to 64-bit hashes (the
-        // hashedShingleIndex tradeoff, oracle-gated).
-        Materialize.eager(shingleIndex(fanOut(df), idCol, textCol, n,
-            None, tokens)
-          .select(col("id"), xxhash64(col("shingle")).as("shingle"),
-            xxhash64(lit(1), col("shingle")).as("h2"))),
-        maxDocFreq),
+      Materialize.eager(shingleIndex(Materialize.fanOut(df), idCol,
+        textCol, n, maxDocFreq, tokens)),
       k, bands, verifyThreshold, maxBucket)
 
-  /** LSH pairs from a prebuilt `(id, shingle)` index. Candidate pairs
-    * are verified EXACTLY against the same index that fed the
-    * signatures (per-doc 64-bit token arrays, intersection via the
-    * codegen'd array_intersect — |cands| verify rows, never the
-    * exploded |cands|·doc-len form), so a `maxDocFreq`-capped index
-    * yields a self-consistent (signatures, verification, ground truth)
-    * triple and the raw text is never re-shingled.
-    */
-  /** `(id, band, sig)` band-bucket table from a `(id, shingle)` index —
+  /** `(id, band, sig)` band-bucket table from a [[shingleIndex]] —
     * the LSH index a production corpus PERSISTS (bands × corpus rows,
     * three small columns): build it once on ingest, then any later
     * near-dup question — self-dedup ([[minhashLshCandidatesFromIndex]])
     * or an incremental batch probe (d19) — is an equi-join against this
     * table instead of a corpus re-shingle.
     */
-  def bandSignatures(rawIdx: DataFrame, k: Int, bands: Int): DataFrame = {
+  def bandSignatures(idx: DataFrame, k: Int, bands: Int): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     val rows = k / bands
-    minhashSignaturesFromIndex(rawIdx, k).select(col("id"),
+    minhashSignaturesFromIndex(idx, k).select(col("id"),
       explode(array((0 until bands).map { b =>
         // band signature = hash of the band's slice of the array (slice
         // is 1-based); same-bucket grouping is identical to hashing the
@@ -624,15 +586,15 @@ object Dedup {
       .select(col("id"), col("bs.band"), col("bs.sig"))
   }
 
-  /** UNVERIFIED banding candidates from a prebuilt `(id, shingle)`
-    * index — the recall-measurement path (comparing candidates against
+  /** UNVERIFIED banding candidates from a [[shingleIndex]] — the
+    * recall-measurement path (comparing candidates against
     * an exact pair set makes a separate Jaccard verify redundant:
     * exact ∩ verified(cand) = exact ∩ cand). Production dedup wants
     * [[minhashLshPairsFromIndex]], which verifies.
     */
-  def minhashLshCandidatesFromIndex(rawIdx: DataFrame, k: Int, bands: Int,
+  def minhashLshCandidatesFromIndex(idx: DataFrame, k: Int, bands: Int,
                                     maxBucket: Int = 200): DataFrame = {
-    val banded = bandSignatures(rawIdx, k, bands)
+    val banded = bandSignatures(idx, k, bands)
     // skew guard: a bucket of m docs yields m² candidate pairs — drop
     // degenerate buckets (non-discriminative signatures) outright.
     // r11 (guide §2.4 "window partitioned like the aggregation needs
@@ -656,48 +618,29 @@ object Dedup {
       .filter(col("__m") <= maxBucket)
       .drop("__m")
       .observe(s"graft_bucketcap_out_${tag}_$maxBucket", count(lit(1)).as("n"))
-    bounded.toDF("band", "sig", "id_a")
-      .join(bounded.toDF("band", "sig", "id_b"), Seq("band", "sig"))
+    bounded.select(col("band"), col("sig"), col("id").as("id_a"))
+      .join(bounded.select(col("band"), col("sig"), col("id").as("id_b")),
+        Seq("band", "sig"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b").distinct()
   }
 
-  def minhashLshPairsFromIndex(rawIdx: DataFrame,
+  /** LSH pairs from a prebuilt [[shingleIndex]]. Candidate pairs are
+    * verified EXACTLY against the same index that fed the signatures
+    * ([[verifyOverlap]] over the per-doc `shingle` hashes), so a
+    * `maxDocFreq`-capped index yields a self-consistent (signatures,
+    * verification, ground truth) triple and the raw text is never
+    * re-shingled.
+    */
+  def minhashLshPairsFromIndex(idx: DataFrame,
                                k: Int, bands: Int,
                                verifyThreshold: Double,
-                               maxBucket: Int = 200): DataFrame = {
-    val cand = minhashLshCandidatesFromIndex(rawIdx, k, bands, maxBucket)
-    // exact verify on candidates via per-doc 64-bit token ARRAYS and
-    // the codegen'd array_intersect (the d26 rework's lesson): the old
-    // exploded form joined each candidate against the full index,
-    // shuffling |cands| × avg-doc-len rows into a groupBy — on
-    // duplicate-heavy corpora where banding legitimately yields
-    // millions of candidates that is billions of rows. The array form
-    // joins |cands| rows against one per-doc array relation; same
-    // intersection counts (the index is per-doc distinct).
-    // pre-hashed index (r11): `shingle` already IS xxhash64(s) — reuse
-    // it instead of hashing the hash (values identical either way
-    // within each form; the per-doc distinct set is what the verify
-    // intersects)
-    val h = (if (rawIdx.columns.contains("h2"))
-        rawIdx.select(col("id"), col("shingle").as("h"))
-      else rawIdx.select(col("id"), xxhash64(col("shingle")).as("h")))
-      .distinct()
-    val docArrays = h.groupBy("id").agg(collect_list(col("h")).as("hs"))
-    cand
-      .join(docArrays.toDF("id_a", "hs_a"), "id_a")
-      .join(docArrays.toDF("id_b", "hs_b"), "id_b")
+                               maxBucket: Int = 200): DataFrame =
+    verifyOverlap(minhashLshCandidatesFromIndex(idx, k, bands, maxBucket),
+        "id_a", "id_b", idx.select(col("id"), col("shingle").as("tok")))
       .select(col("id_a"), col("id_b"),
-        size(array_intersect(col("hs_a"), col("hs_b")))
-          .cast("long").as("n_common"),
-        size(col("hs_a")).cast("long").as("sz_a"),
-        size(col("hs_b")).cast("long").as("sz_b"))
-      .withColumn("jaccard",
-        col("n_common").cast("double")
-          / (col("sz_a") + col("sz_b") - col("n_common")).cast("double"))
+        jaccard(col("n_inter"), col("n_a"), col("n_b")).as("jaccard"))
       .filter(col("jaccard") >= verifyThreshold)
-      .select("id_a", "id_b", "jaccard")
-  }
 
   // ---- near-dup clustering ------------------------------------------
 
@@ -1098,8 +1041,9 @@ object Dedup {
       emb.join(assign, idCol)
         .select(col("cluster"), col(idCol).as("id"), col(vecCol).as("v")),
       col("cluster"))
-    side.toDF("cluster", "id_a", "va")
-      .join(side.toDF("cluster", "id_b", "vb"), Seq("cluster"))
+    side.select(col("cluster"), col("id").as("id_a"), col("v").as("va"))
+      .join(side.select(col("cluster"), col("id").as("id_b"),
+        col("v").as("vb")), Seq("cluster"))
       .filter(col("id_a") < col("id_b"))
       .filter(Similarity.cosine(col("va"), col("vb")) >= threshold)
       .select("id_a", "id_b")
@@ -1217,8 +1161,10 @@ object Dedup {
           shiftright(col("simhash"), start).bitwiseAND(mask).as("key"))
       }: _*)).as("bk"))
       .select(col("id"), col("simhash"), col("bk.blk"), col("bk.key"))
-    val cand = blocks.toDF("id_a", "sh_a", "blk", "key")
-      .join(blocks.toDF("id_b", "sh_b", "blk", "key"), Seq("blk", "key"))
+    val cand = blocks.select(col("id").as("id_a"),
+        col("simhash").as("sh_a"), col("blk"), col("key"))
+      .join(blocks.select(col("id").as("id_b"), col("simhash").as("sh_b"),
+        col("blk"), col("key")), Seq("blk", "key"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b", "sh_a", "sh_b").distinct()
     cand

@@ -60,8 +60,8 @@ object Materialize {
     *
     * SKEW (guide §2.5): partitioning by key ships every occurrence of a
     * hot key to one partition — callers with skew-prone keys must drop
-    * hot keys BEFORE calling this (see Dedup.hashedShingleIndex: the
-    * doc-frequency cap runs upstream of this shuffle since r11).
+    * hot keys BEFORE calling this (see Dedup.shingleIndex: the
+    * doc-frequency cap runs upstream of this shuffle).
     */
   def eagerByKey(df: DataFrame, keys: Column*): DataFrame =
     eager(df.repartition(keys: _*))

@@ -224,14 +224,13 @@ object Sampling {
                         textCol: String = "text"): DataFrame = {
     require(k >= 1, s"k must be positive: $k")
     val spark = docs.sparkSession
-    val toks = docs
+    // eager (Materialize): per-round consumers otherwise race a lazy
+    // cold cache; also truncates the k-round loop's re-analyzed lineage
+    val toks = Materialize.eager(docs
       .select(col(idCol).cast("long").as("id"),
         explode(split(trim(col(textCol)), "\\s+")).as("tok"))
       .filter(length(col("tok")) > 0)
-      .distinct()
-    // eager (Materialize): per-round consumers otherwise race a lazy
-    // cold cache; also truncates the k-round loop's re-analyzed lineage
-    val toksM = Materialize.eager(toks)
+      .distinct())
     val picked = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Long)]
     var covered = Set.empty[String]
     for (round <- 1 to k) {

@@ -324,14 +324,15 @@ object Similarity {
       .withColumn("__m", count(lit(1)).over(wBucket))
       .filter(col("__m") <= maxBucket)
       .drop("__m")
-    val pairs = bounded.toDF("tbl", "bucket", "id_a")
-      .join(bounded.toDF("tbl", "bucket", "id_b"), Seq("tbl", "bucket"))
+    val pairs = bounded.select(col("tbl"), col("bucket"), col("id").as("id_a"))
+      .join(bounded.select(col("tbl"), col("bucket"), col("id").as("id_b")),
+        Seq("tbl", "bucket"))
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
     pairs
-      .join(side.toDF("id_a", "va"), Seq("id_a"))
-      .join(side.toDF("id_b", "vb"), Seq("id_b"))
+      .join(side.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))
+      .join(side.select(col("id").as("id_b"), col("v").as("vb")), Seq("id_b"))
       .withColumn("cosine", cosine(col("va"), col("vb")))
       .filter(col("cosine") >= threshold)
       .select("id_a", "id_b", "cosine")

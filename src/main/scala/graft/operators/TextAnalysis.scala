@@ -488,10 +488,12 @@ object TextAnalysis {
     * combined aggregation keyed by shingle, and the result is a bounded
     * `TakeOrderedAndProject` top-k — no driver-side anything.
     */
-  def commonPhrases(docs: DataFrame, idCol: String = "doc_id",
-                    textCol: String = "text", n: Int = 3,
+  def commonPhrases(docs: DataFrame, textCol: String = "text", n: Int = 3,
                     minDocs: Int = 2, topK: Int = 200): DataFrame =
-    Dedup.shingleIndex(docs, idCol, textCol, n, None, tokens = true)
+    // the phrase text is the output, so explode the shingle strings
+    // here rather than the hashed Dedup.shingleIndex
+    docs.select(explode(Dedup.shinglesOf(col(textCol), n, tokens = true))
+        .as("shingle"))
       .groupBy("shingle").agg(count(lit(1)).as("n_docs"))
       .filter(col("n_docs") >= minDocs)
       .orderBy(col("n_docs").desc, col("shingle"))
@@ -587,23 +589,21 @@ object TextAnalysis {
     * (template/boilerplate corpora score low). The complement of the
     * d2/d9 duplication signals, useful as a quality feature on its own.
     *
-    * Scale shape: codegen'd TokenShingles explode (per-doc distinct),
-    * 64-bit hashed shingles, one groupBy for corpus document frequency,
-    * one key-partitioned join back, one groupBy per doc — no all-pairs
-    * stage, same inverted-index discipline as the dedup suite.
+    * Scale shape: the dedup family's [[Dedup.shingleIndex]] (per-doc
+    * distinct 64-bit shingle hashes), one count window for corpus
+    * document frequency, one groupBy per doc — no all-pairs stage.
     */
   def noveltyScores(docs: DataFrame, idCol: String = "doc_id",
                     textCol: String = "text", n: Int = 3): DataFrame = {
     val idx = Dedup.shingleIndex(Materialize.fanOut(docs), idCol,
         textCol, n, tokens = true)
-      .select(col("id"), xxhash64(col("shingle")).as("h"))
-    // r11 (guide §2.4): corpus document frequency as a COUNT WINDOW
-    // over h instead of the r10 aggregate + join back onto a keyed
-    // eager checkpoint — the aggregate, the join AND the
-    // materialization barrier all collapse into one window pass over
-    // one exchange (plan: 2 exchanges total, explode runs once).
-    val wH = org.apache.spark.sql.expressions.Window.partitionBy("h")
-    idx.withColumn("df", count(lit(1)).over(wH))
+    // corpus document frequency as a COUNT WINDOW over the shingle
+    // hash instead of an aggregate + join back onto a keyed eager
+    // checkpoint — the aggregate, the join AND the materialization
+    // barrier all collapse into one window pass over one exchange
+    // (plan: 2 exchanges total, explode runs once; h2 is pruned).
+    val wSh = org.apache.spark.sql.expressions.Window.partitionBy("shingle")
+    idx.withColumn("df", count(lit(1)).over(wSh))
       .groupBy(col("id").as(idCol))
       .agg((sum(when(col("df") === 1, 1L).otherwise(0L)).cast("double") /
         count(lit(1)).cast("double")).as("novelty"))

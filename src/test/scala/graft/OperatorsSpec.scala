@@ -452,10 +452,12 @@ class OperatorsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val idx = Dedup.shingleIndex(docs, "doc_id", "text", 3, None, tokens = true)
     val capped = Dedup.capDocFreq(idx, Some(3))
-    // column order preserved: downstream positional renames (toDF) rely on it
+    // column order preserved (a USING anti-join would move the key first)
     assert(capped.columns.toSeq == idx.columns.toSeq)
-    val kept = capped.select("shingle").as[String].collect()
-    assert(!kept.contains("x y z") && kept.nonEmpty)
+    // the index carries shingles as xxhash64(s): compare against the hash
+    val hot = spark.range(1).select(xxhash64(lit("x y z"))).as[Long].head()
+    val kept = capped.select("shingle").as[Long].collect()
+    assert(!kept.contains(hot) && kept.nonEmpty)
     // the hot (df>cap) list is the broadcast side of the anti-join — the
     // ~vocabulary-sized kept set must never move to the driver
     val plan = capped.queryExecution.executedPlan.toString
@@ -521,6 +523,45 @@ class OperatorsSpec extends SparkSpec {
     // 35 docs × 4 bands = 140 banded rows; the 5 distinct docs' 20
     // singleton-bucket rows survive, the 120 degenerate ones drop
     assert(in == 140L && out == 20L, s"in=$in out=$out")
+  }
+
+  test("index consumers read the shingle index by name: reordered + extra columns give identical results") {
+    // 40 unrelated docs over a 5000-word vocabulary, plus a planted
+    // near-duplicate of every 4th one (last token changed: word-trigram
+    // Jaccard 27/29 ≈ 0.93)
+    val rnd = new scala.util.Random(7)
+    val base = (0L until 40L).map(i =>
+      i -> Seq.fill(30)(s"w${rnd.nextInt(5000)}").mkString(" "))
+    val planted = base.filter(_._1 % 4 == 0).map { case (i, t) =>
+      (i, 1000L + i, t.split(" ").init.mkString(" ") + s" edit$i") }
+    val docs = (base ++ planted.map(p => p._2 -> p._3)).toDF("doc_id", "text")
+    val want: Set[(Any, Any)] = planted.map(p => (p._1, p._2)).toSet
+    val idx = Dedup.shingleIndex(docs, "doc_id", "text", 3, tokens = true)
+    val shuffled = idx.select(col("h2"), lit(7L).as("extra"), col("shingle"),
+      col("id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.toList
+        case v => v
+      }.toList).toSet
+    def same(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame) = {
+      val (a, b) = (rows(f(idx)), rows(f(shuffled)))
+      assert(a.nonEmpty && a == b)
+      a
+    }
+    val exact = same(Dedup.ngramJaccardPairsFromIndex(_, 0.8))
+    assert(exact.map(r => (r(0), r(1))) == want)
+    same(Dedup.minhashSignaturesFromIndex(_, 32))
+    same(Dedup.bandSignatures(_, 32, 8))
+    val cand = same(Dedup.minhashLshCandidatesFromIndex(_, 32, 8))
+    assert(want.subsetOf(cand.map(r => (r(0), r(1)))), s"candidates: $cand")
+    val lsh = same(Dedup.minhashLshPairsFromIndex(_, 32, 8, 0.8))
+    assert(lsh == exact)
+    // a consumer selecting (id, shingle) never evaluates h2, capped or not
+    val pruned = Dedup.shingleIndex(docs, "doc_id", "text", 3, Some(3),
+        tokens = true).select("id", "shingle")
+      .queryExecution.optimizedPlan.toString
+    assert(!pruned.contains("xxhash64(1,"), pruned)
   }
 
   test("minhashLshPairs agrees with exact jaccard on near-dups") {
@@ -759,15 +800,19 @@ class OperatorsSpec extends SparkSpec {
 
   test("MinHashAgg equals the k-column min formulation bit-for-bit") {
     val docs = Engine.table(spark, sf, "documents").limit(200)
-    val rawIdx = Dedup.shingleIndex(docs, "doc_id", "text", n = 3, tokens = true)
     val k = 16
-    // new: one TypedImperativeAggregate buffer → array<bigint>
-    val viaAgg = Dedup.minhashSignaturesFromIndex(rawIdx, k)
+    // new: one TypedImperativeAggregate buffer → array<bigint>, over the
+    // typed index (shingle = xxhash64(s), h2 = xxhash64(1, s))
+    val viaAgg = Dedup.minhashSignaturesFromIndex(
+        Dedup.shingleIndex(docs, "doc_id", "text", n = 3, tokens = true), k)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toList).toMap
-    // old: k separate min(h1 + i*h2) aggregate columns
-    val idx = rawIdx
-      .withColumn("h1", xxhash64(col("shingle")))
-      .withColumn("h2", xxhash64(lit(1), col("shingle")))
+    // old: k separate min(h1 + i*h2) aggregate columns, hashing the
+    // shingle strings directly
+    val idx = docs
+      .select(col("doc_id").as("id"),
+        explode(Dedup.tokenShingles(col("text"), 3)).as("s"))
+      .withColumn("h1", xxhash64(col("s")))
+      .withColumn("h2", xxhash64(lit(1), col("s")))
     val mins = (0 until k).map(i =>
       min(col("h1") + lit(i.toLong) * col("h2")).as(s"h$i"))
     val viaCols = idx.groupBy("id").agg(mins.head, mins.tail: _*)
