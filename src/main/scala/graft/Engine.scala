@@ -28,6 +28,19 @@ object Engine {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
+      // no-silent-caps: when a query stage materializes empty,
+      // AQEPropagateEmptyRelation replaces the plan above it with an
+      // EmptyRelationExec, and Spark 4.1's observedMetrics walk
+      // (CollectMetricsExec.collect) never descends into that node's
+      // logical plan — the dedup cap observations that already ran
+      // below it vanish, so a cap that empties the answer is the one
+      // that reports nothing. Excluding the rule keeps every
+      // CollectMetricsExec in the executed plan; the cost is that the
+      // stages downstream of an empty stage still run, over empty
+      // input. The static PropagateEmptyRelation (empty at plan time),
+      // partition coalescing and skew-join handling are unaffected.
+      .config("spark.sql.adaptive.optimizer.excludedRules",
+        "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
       .config("spark.sql.session.timeZone", "UTC")
       // octosql-style null-on-fail casts / OOB indexing (and DuckDB-like
       // non-erroring semantics) instead of Spark 4's ANSI errors:
@@ -124,7 +137,11 @@ object Engine {
     * dropped-entry counts in the pass they already run; this listener
     * turns the observations into a stderr line WHEN A CAP BINDS, so a
     * 100×-scale user sees the dedup went lossy instead of silently
-    * getting fewer pairs. Quiet when nothing is dropped.
+    * getting fewer pairs. Quiet when nothing is dropped. It reads
+    * `qe.observedMetrics`, which keeps the observations only because
+    * [[session]] excludes AQEPropagateEmptyRelation: with that rule on,
+    * a query whose later stage runs empty (no candidate pair survives
+    * the cap) loses them and this listener prints nothing.
     */
   private def registerCapListener(spark: SparkSession): Unit =
     spark.listenerManager.register(

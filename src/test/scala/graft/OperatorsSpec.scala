@@ -501,10 +501,11 @@ class OperatorsSpec extends SparkSpec {
   test("lsh bucket cap observes dropped doc slots (no silent caps)") {
     // 30 identical docs (every band bucket holds all 30 > maxBucket=10)
     // + 5 fully distinct docs whose singleton buckets survive. The
-    // partial-drop shape is the realistic at-scale case — when EVERY
-    // bucket is dropped, AQE's empty-relation propagation can skip the
-    // probe side (and its observe) entirely, but a fully-empty
-    // candidate output is loud on its own.
+    // survivors form no pair, so the candidate output is empty: the
+    // shuffle stage under the final distinct runs empty, which is the
+    // case where AQE's empty-relation propagation would drop both
+    // observations from observedMetrics. Engine.session excludes that
+    // rule so the cap still reports when it empties the answer.
     val docs = ((1 to 30).map(i => (i.toLong, "a b c d e f g h")) ++
       (31 to 35).map(i => (i.toLong,
         s"p$i q$i r$i s$i t$i u$i v$i w$i")))
