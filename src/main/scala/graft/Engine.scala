@@ -34,11 +34,12 @@ object Engine {
       // (CollectMetricsExec.collect) never descends into that node's
       // logical plan — the dedup cap observations that already ran
       // below it vanish, so a cap that empties the answer is the one
-      // that reports nothing. Excluding the rule keeps every
-      // CollectMetricsExec in the executed plan; the cost is that the
-      // stages downstream of an empty stage still run, over empty
-      // input. The static PropagateEmptyRelation (empty at plan time),
-      // partition coalescing and skew-join handling are unaffected.
+      // that reports nothing (and Engine's cap listener stays quiet).
+      // The built-in rule is excluded here and GraftExtensions'
+      // plans.ObservedEmptyPropagation runs the same rules in its
+      // place, except on a plan that carries an observe: only there do
+      // the stages downstream of an empty stage still run, over empty
+      // input. Code that reads observedMetrics needs this session.
       .config("spark.sql.adaptive.optimizer.excludedRules",
         "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation")
       .config("spark.sql.session.timeZone", "UTC")
@@ -137,11 +138,8 @@ object Engine {
     * dropped-entry counts in the pass they already run; this listener
     * turns the observations into a stderr line WHEN A CAP BINDS, so a
     * 100×-scale user sees the dedup went lossy instead of silently
-    * getting fewer pairs. Quiet when nothing is dropped. It reads
-    * `qe.observedMetrics`, which keeps the observations only because
-    * [[session]] excludes AQEPropagateEmptyRelation: with that rule on,
-    * a query whose later stage runs empty (no candidate pair survives
-    * the cap) loses them and this listener prints nothing.
+    * getting fewer pairs. Quiet when nothing is dropped. Needs the
+    * [[session]] conf; see its excludedRules note.
     */
   private def registerCapListener(spark: SparkSession): Unit =
     spark.listenerManager.register(

@@ -136,10 +136,8 @@ object Dedup {
       // output entry counts in the SAME pass (no extra job) so every
       // run reports when the cap binds. Engine's session listener
       // turns the pair into a `[graft] capDocFreq ...` log line; specs
-      // read queryExecution.observedMetrics directly. Both rely on a
-      // session built by Engine.session: a plain SparkSession with AQE
-      // on loses the observations whenever a later stage runs empty
-      // (AQEPropagateEmptyRelation; see Engine.session).
+      // read queryExecution.observedMetrics directly. Needs
+      // Engine.session; see its excludedRules note.
       val tag = capObsCounter.incrementAndGet()
       // re-select in the input's column order (a USING join moves the
       // key to the front)
@@ -612,11 +610,7 @@ object Dedup {
     // no-silent-caps: in/out counts observed around the window filter
     // (the capDocFreq pattern); the filter reads the window column, so
     // Catalyst cannot push it below the window (or the in-observe).
-    // They reach observedMetrics only in an Engine.session: with a
-    // plain AQE session, when no candidate pair survives the cap the
-    // stage under the final distinct runs empty, and
-    // AQEPropagateEmptyRelation then drops both observations (see
-    // Engine.session).
+    // Needs Engine.session; see its excludedRules note.
     val tag = capObsCounter.incrementAndGet()
     val wBucket = org.apache.spark.sql.expressions.Window
       .partitionBy("band", "sig")

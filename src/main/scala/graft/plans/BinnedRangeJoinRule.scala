@@ -114,13 +114,15 @@ object BinnedRangeJoinRule extends Rule[LogicalPlan] {
   * on any SparkSession via
   * `spark.sql.extensions=graft.plans.GraftExtensions` (or
   * `builder.withExtensions`). Injects [[BinnedRangeJoinRule]] (optimizer
-  * rule) and [[TopKPerKeyStrategy]] (planner strategy for the custom
-  * [[TopKPerKeyNode]] physical operator).
+  * rule), [[TopKPerKeyStrategy]] (planner strategy for the custom
+  * [[TopKPerKeyNode]] physical operator) and [[ObservedEmptyPropagation]]
+  * (AQE runtime rule).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     ext.injectOptimizerRule(_ => BinnedRangeJoinRule)
     ext.injectPlannerStrategy(_ => TopKPerKeyStrategy)
+    ext.injectRuntimeOptimizerRule(_ => ObservedEmptyPropagation)
     // union-typed ORDER BY → distributed 3-key sort (values.go order)
     ext.injectResolutionRule(_ => VariantSortRule)
     // union-typed GROUP BY / DISTINCT → json-key grouping

@@ -71,7 +71,7 @@ class GoldenScenariosSpec extends SparkSpec {
   }
 
   test("golden corpus is present (guard against silent skip)") {
-    assume(Files.isDirectory(root),
+    assert(Files.isDirectory(root),
       s"reference scenario corpus missing at $root — the golden replay would silently skip")
     assert(scenarios.size == 30, s"expected 30 scenarios, found ${scenarios.size}")
   }

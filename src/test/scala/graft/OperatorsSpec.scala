@@ -501,11 +501,10 @@ class OperatorsSpec extends SparkSpec {
   test("lsh bucket cap observes dropped doc slots (no silent caps)") {
     // 30 identical docs (every band bucket holds all 30 > maxBucket=10)
     // + 5 fully distinct docs whose singleton buckets survive. The
-    // survivors form no pair, so the candidate output is empty: the
-    // shuffle stage under the final distinct runs empty, which is the
-    // case where AQE's empty-relation propagation would drop both
-    // observations from observedMetrics. Engine.session excludes that
-    // rule so the cap still reports when it empties the answer.
+    // survivors form no pair, so the candidate output is empty and the
+    // stage under the final distinct runs empty: the case where the cap
+    // empties the answer and must still report (Engine.session's
+    // excludedRules note).
     val docs = ((1 to 30).map(i => (i.toLong, "a b c d e f g h")) ++
       (31 to 35).map(i => (i.toLong,
         s"p$i q$i r$i s$i t$i u$i v$i w$i")))
