@@ -225,11 +225,12 @@ object Engine {
     if (name == "events") normalizeEventTime(df, "ts") else df
   }
 
-  /** Register every table in `dir` as a temp view so `spark.sql` works
-    * over the whole star schema (the federation entry point).
+  /** Register the tables of `dir` that `sql` names (whole words) as
+    * temp views, so `spark.sql` / `Dialect.prepare` can run it. Each
+    * registration reads its table's parquet footer in a Spark job, so a
+    * query pays for the tables it reads, not all ten.
     */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    TableNames.foreach { n =>
-      table(spark, dir, n).createOrReplaceTempView(n)
-    }
+  def registerFor(spark: SparkSession, dir: String, sql: String): Unit =
+    TableNames.filter(n => s"\\b$n\\b".r.findFirstIn(sql).isDefined)
+      .foreach(n => table(spark, dir, n).createOrReplaceTempView(n))
 }

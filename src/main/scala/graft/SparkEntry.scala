@@ -135,6 +135,23 @@ object SparkEntry {
   private def dsum(c: Column): Column =
     sum(c.cast(DecimalType(18, 2))).cast(DoubleType)
 
+  /** An entry whose oracle text is also its query: the text runs
+    * through graft's own SQL frontend ([[graft.sql.Dialect.prepare]],
+    * the CLI's path) over the tables it names.
+    */
+  private def oracleEntry(name: String): (String, (SparkSession, String) => DataFrame) =
+    name -> ((s, dir) => {
+      val text = oracleSql(name)
+      Engine.registerFor(s, dir, text)
+      graft.sql.Dialect.prepare(s, text).df
+    })
+
+  /** Spark SQL text over the tables it names. */
+  private def sqlOver(s: SparkSession, dir: String, text: String): DataFrame = {
+    Engine.registerFor(s, dir, text)
+    s.sql(text)
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
@@ -146,15 +163,7 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
 
     // §2.4 SimpleGroupBy: hash aggregation with sum/avg/count
-    "q1_agg" -> ((s, dir) => {
-      t(s, dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-          dsum(col("l_quantity")).as("sum_qty"),
-          dsum(col("l_extendedprice")).as("sum_base_price"),
-          (dsum(col("l_quantity")) / count(lit(1)).cast(DoubleType)).as("avg_qty"),
-          count(lit(1)).as("n"))
-    }),
+    oracleEntry("q1_agg"),
 
     // §2.2 Filter + Map: row-level projection, predicate pushdown to scan
     "q2_filter" -> ((s, dir) => {
@@ -213,46 +222,20 @@ object SparkEntry {
     }),
 
     // semi/anti joins (EXISTS / NOT EXISTS)
-    "q7_semi_anti" -> ((s, dir) => {
-      val c = t(s, dir, "customer")
-      val o = t(s, dir, "orders").select("o_custkey")
-      val withO = c.join(o, c("c_custkey") === o("o_custkey"), "left_semi")
-        .agg(count(lit(1)).as("n_with"))
-      val without = c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
-        .agg(count(lit(1)).as("n_without"))
-      withO.crossJoin(without)
-    }),
+    oracleEntry("q7_semi_anti"),
 
     // §2.2 Distinct
-    "q8_distinct" -> ((s, dir) =>
-      t(s, dir, "orders").select("o_orderstatus", "o_orderpriority").distinct()),
+    oracleEntry("q8_distinct"),
 
     // §2.6 ORDER BY + LIMIT (top-k → TakeOrderedAndProject)
-    "q9_topk" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .select("o_orderkey", "o_totalprice")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        .limit(10)),
+    oracleEntry("q9_topk"),
 
     // §2.7 set operations
-    "q10_setops" -> ((s, dir) => {
-      val ck = t(s, dir, "customer").select(col("c_nationkey").cast(LongType).as("k"))
-      val sk = t(s, dir, "supplier").select(col("s_nationkey").cast(LongType).as("k"))
-      val u = ck.union(sk).distinct().withColumn("op", lit("union"))
-      val i = ck.intersect(sk).withColumn("op", lit("intersect"))
-      val e = ck.distinct().except(sk).withColumn("op", lit("except"))
-      u.union(i).union(e).select("op", "k")
-    }),
+    oracleEntry("q10_setops"),
 
     // §2.7 multiset (ALL) set-operation semantics — duplicates preserved
     // per bag arithmetic, the variant q10's DISTINCT forms don't cover
-    "q58_setops_all" -> ((s, dir) => {
-      val ck = t(s, dir, "customer").select(col("c_nationkey").cast(LongType).as("k"))
-      val sk = t(s, dir, "supplier").select(col("s_nationkey").cast(LongType).as("k"))
-      val ia = ck.intersectAll(sk).withColumn("op", lit("intersect_all"))
-      val ea = ck.exceptAll(sk).withColumn("op", lit("except_all"))
-      ia.union(ea).groupBy("op", "k").agg(count(lit(1)).as("n"))
-    }),
+    oracleEntry("q58_setops_all"),
 
     // full DataSourceV2 connector (the Spark-native analog of the
     // reference's plugin datasource protocol): schema inference,
@@ -343,31 +326,13 @@ object SparkEntry {
         unix_timestamp(col("o_orderdate")).as("epoch_s"))),
 
     // §2.9 QueryExpression: IN-subquery (planned as semi join)
-    "q14_in_subquery" -> ((s, dir) => {
-      val c = t(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-        .select("c_custkey")
-      t(s, dir, "orders")
-        .join(c, col("o_custkey") === col("c_custkey"), "left_semi")
-        .agg(count(lit(1)).as("n"))
-    }),
+    oracleEntry("q14_in_subquery"),
 
     // §2.2 CTE + §2.5-beyond window function (row_number top-1 per key)
-    "q15_cte_window" -> ((s, dir) => {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("o_custkey")
-        .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-      t(s, dir, "orders")
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select("o_custkey", "o_orderkey", "o_totalprice")
-    }),
+    oracleEntry("q15_cte_window"),
 
     // §2.8 range TVF
-    "q16_range" -> ((s, _) =>
-      s.range(1, 1001).select(
-        col("id").as("i"),
-        (col("id") * col("id")).as("sq"),
-        pmod(col("id"), lit(7)).as("m"))),
+    oracleEntry("q16_range"),
 
     // §2.8 tumble TVF (batch form; streaming form in st1_stream_tumble)
     "q17_tumble" -> ((s, dir) => {
@@ -399,34 +364,18 @@ object SparkEntry {
         get_json_object(col("props"), "$.k").cast(LongType).as("k"))),
 
     // LATERAL (reference LOOKUP JOIN, SURVEY §2.3): top-2 nations per region
-    "q21_lateral" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
+    "q21_lateral" -> ((s, dir) => sqlOver(s, dir,
         """SELECT r.r_name, l.n_name
           |FROM region r,
           |LATERAL (SELECT n_name FROM nation n
           |         WHERE n.n_regionkey = r.r_regionkey
-          |         ORDER BY n_name LIMIT 2) l""".stripMargin)
-    }),
+          |         ORDER BY n_name LIMIT 2) l""".stripMargin)),
 
-    // grouping sets / rollup (beyond-parity §2.4 note)
-    // two-level lattice: pre-aggregate per (status, prio) BEFORE the
-    // rollup, so the Expand operator multiplies key-cardinality partial
-    // rows (~15) instead of the whole table — counts re-aggregate as
-    // sums exactly. At 100 TB the single-level form triples the scan's
-    // row count through the shuffle; this form's Expand cost is ~zero.
-    "q22_rollup" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .groupBy("o_orderstatus", "o_orderpriority")
-        .agg(count(lit(1)).as("__n"))
-        .rollup("o_orderstatus", "o_orderpriority")
-        // coalesce: on an empty table the () lattice row is SUM(NULL)
-        // here but COUNT(*)=0 in the single-level oracle form
-        .agg(coalesce(sum(col("__n")), lit(0L)).as("n"))
-        .select(
-          coalesce(col("o_orderstatus"), lit("ALL")).as("status"),
-          coalesce(col("o_orderpriority"), lit("ALL")).as("prio"),
-          col("n"))),
+    // grouping sets / rollup (beyond-parity §2.4 note), single-level:
+    // the partial aggregate runs right after the Expand, so the shuffle
+    // carries key-cardinality rows. A two-level lattice (q41's form)
+    // measured no faster at sf0.1 for this 3-set count over orders
+    oracleEntry("q22_rollup"),
 
     // §2.4 aggregate battery: min/max/count_distinct/array_agg
     "q23_aggs" -> ((s, dir) =>
@@ -442,41 +391,13 @@ object SparkEntry {
             .as("statuses"))),
 
     // §2.10 math battery (transcendentals bit-checked against oracle)
-    "q24_math" -> ((s, dir) =>
-      t(s, dir, "part").select(
-        col("p_partkey"),
-        abs(col("p_retailprice") - 1000.0).as("a"),
-        sqrt(col("p_retailprice")).as("sq"),
-        ceil(col("p_retailprice")).cast(LongType).as("ce"),
-        floor(col("p_retailprice")).cast(LongType).as("fl"),
-        round(log(col("p_retailprice")), 9).as("ln_v"),
-        round(log2(col("p_retailprice")), 9).as("l2"),
-        round(log10(col("p_retailprice")), 9).as("l10"),
-        round(pow(col("p_retailprice"), 0.3), 9).as("pw"),
-        round(exp(col("p_retailprice") / 1000.0), 9).as("ex"))),
+    oracleEntry("q24_math"),
 
     // §2.9 And/Or 3-valued logic + NULL tests (reference Kleene logic)
-    "q25_null_logic" -> ((s, dir) => {
-      val n = t(s, dir, "nation")
-        .withColumn("x", nullif(pmod(col("n_nationkey"), lit(3)), lit(0)))
-      n.select(
-        col("n_nationkey").cast(LongType).as("k"),
-        col("x").cast(LongType).as("x"),
-        (col("x") > 1).as("gt1"),
-        ((col("x") > 1) && lit(null).cast("boolean")).as("and_null"),
-        ((col("x") > 1) || lit(null).cast("boolean")).as("or_null"),
-        col("x").isNull.as("is_n"),
-        col("x").isNotNull.as("is_nn"),
-        not(col("x") > 1).as("not_gt1"))
-    }),
+    oracleEntry("q25_null_logic"),
 
     // §2.10 IN / NOT IN over literal tuples
-    "q26_in_tuple" -> ((s, dir) =>
-      t(s, dir, "orders")
-        .filter(col("o_orderpriority").isin("1-URGENT", "3-MEDIUM")
-          && !col("o_orderstatus").isin("F"))
-        .groupBy("o_orderpriority")
-        .agg(count(lit(1)).as("n"))),
+    oracleEntry("q26_in_tuple"),
 
     // §2.4 empty-set aggregation: NULL sums/mins, zero count
     "q27_empty_agg" -> ((s, dir) =>
@@ -487,9 +408,7 @@ object SparkEntry {
 
     // sessionization (30-min inactivity gap) via window functions — the
     // scalable batch form of the reference's stateful stream grouping
-    "q28_sessionize" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
+    "q28_sessionize" -> ((s, dir) => sqlOver(s, dir,
         """WITH g AS (
           |  SELECT user_id, ts, event_id,
           |    CASE WHEN lag(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL
@@ -504,8 +423,7 @@ object SparkEntry {
           |  FROM g)
           |SELECT user_id, session_id, COUNT(*) AS n_events,
           |  MIN(ts) AS session_start, MAX(ts) AS session_end
-          |FROM sess GROUP BY user_id, session_id""".stripMargin)
-    }),
+          |FROM sess GROUP BY user_id, session_id""".stripMargin)),
 
     // reference avg-int truncation semantics (aggregates/average.go:47-49)
     "q29_avg_int" -> ((s, dir) =>
@@ -535,16 +453,7 @@ object SparkEntry {
 
     // SQL:2003 FILTER clause through the engine's SQL surface —
     // conditional aggregation without CASE scaffolding
-    "q85_filter_clause" -> ((s, dir) => {
-      t(s, dir, "lineitem").createOrReplaceTempView("li_q85")
-      s.sql(
-        """SELECT l_returnflag,
-          |  count(*) AS n,
-          |  count(*) FILTER (WHERE l_discount > 0.05) AS n_discounted,
-          |  CAST(sum(CAST(l_quantity AS DECIMAL(18,2)))
-          |    FILTER (WHERE l_tax = 0) AS DOUBLE) AS qty_no_tax
-          |FROM li_q85 GROUP BY l_returnflag""".stripMargin)
-    }),
+    oracleEntry("q85_filter_clause"),
 
     // §2.4 *_distinct aggregates (aggregates/distinct.go)
     "q31_distinct_aggs" -> ((s, dir) =>
@@ -1238,26 +1147,10 @@ object SparkEntry {
 
     // TPC-H Q16 (supplier counts by part attribute, NOT IN exclusion):
     // the NOT IN subquery (suppliers with negative balance, standing
-    // in for the benchmark's complaint comment scan) is a broadcast
-    // LEFT ANTI join — s_suppkey is non-null so NOT IN ≡ anti join.
-    // count(DISTINCT) shuffles once on the (brand, type, size) key.
-    "q118_tpch_q16" -> ((s, dir) => {
-      val p = t(s, dir, "part")
-        .filter(col("p_brand") =!= "Brand#13"
-          && col("p_type") =!= "PROMO"
-          && col("p_size").isin(1, 4, 9, 16, 25, 36, 49))
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-      val bad = t(s, dir, "supplier")
-        .filter(col("s_acctbal") < 0).select("s_suppkey")
-      t(s, dir, "lineitem").select("l_partkey", "l_suppkey")
-        .join(p, col("l_partkey") === col("p_partkey"))
-        .join(bad, col("l_suppkey") === col("s_suppkey"),
-          "left_anti")
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(countDistinct("l_suppkey").as("supplier_cnt"))
-        .orderBy(col("supplier_cnt").desc, col("p_brand"),
-          col("p_type"), col("p_size"))
-    }),
+    // in for the benchmark's complaint comment scan) plans as a
+    // broadcast null-aware anti join; count(DISTINCT) shuffles once on
+    // the (brand, type, size) key.
+    oracleEntry("q118_tpch_q16"),
 
     // TPC-H Q20 (part promotion, adapted: a (supplier, part) pair
     // "dominates" a SMALL-type part when its year-2000 shipped
@@ -2542,22 +2435,7 @@ object SparkEntry {
     // probabilities. Both windows are partitioned (user_id / prev) —
     // no global sort anywhere — and p is a raw IEEE division of two
     // BIGINTs, bit-identical across engines without any rounding
-    "q67_markov" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
-        """WITH seq AS (
-          |  SELECT user_id, event_type,
-          |    lag(event_type) OVER (PARTITION BY user_id
-          |                          ORDER BY ts, event_id) AS prev
-          |  FROM events),
-          |c AS (
-          |  SELECT prev, event_type AS curr, COUNT(*) AS n
-          |  FROM seq WHERE prev IS NOT NULL GROUP BY 1, 2)
-          |SELECT prev, curr, n,
-          |  CAST(n AS DOUBLE) / CAST(SUM(n) OVER (PARTITION BY prev)
-          |    AS DOUBLE) AS p
-          |FROM c""".stripMargin)
-    }),
+    oracleEntry("q67_markov"),
 
     // market-basket co-occurrence (the A-priori candidate step):
     // part pairs bought in the same order, by support. Pair
@@ -2565,16 +2443,7 @@ object SparkEntry {
     // by order width, never corpus-quadratic — via a key-partitioned
     // self-join on the order; support counting is one map-side-
     // combinable aggregate; top-20 is a TakeOrdered
-    "q74_basket_pairs" -> ((s, dir) => {
-      val li = t(s, dir, "lineitem")
-        .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
-        .distinct()
-      li.toDF("ok", "pa").join(li.toDF("ok", "pb"), "ok")
-        .filter(col("pa") < col("pb"))
-        .groupBy("pa", "pb").agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 2)
-        .orderBy(col("support").desc, col("pa"), col("pb")).limit(20)
-    }),
+    oracleEntry("q74_basket_pairs"),
 
     // A/B experiment readout: per-metric Welch's t between variant
     // cohorts (user_id parity stands in for the assignment hash) —
@@ -2801,20 +2670,7 @@ object SparkEntry {
     // window never becomes the q44-style single-task scale hazard.
     // percent_rank and cume_dist are single divisions of identical
     // integers in both engines — bit-equal
-    "q81_rank_family" -> ((s, dir) => {
-      val daily = t(s, dir, "events")
-        .groupBy(col("event_type"),
-          date_trunc("day", col("ts")).as("day"))
-        .agg(dsum(col("value")).as("total"))
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("event_type").orderBy(col("total").desc, col("day"))
-      daily.select(col("event_type"), col("day"), col("total"),
-          rank().over(w).as("rnk"), dense_rank().over(w).as("drnk"),
-          round(percent_rank().over(w), 6).as("prank"),
-          round(cume_dist().over(w), 6).as("cdist"),
-          ntile(4).over(w).as("quartile"))
-        .filter(col("rnk") <= 10)
-    }),
+    oracleEntry("q81_rank_family"),
 
     // data-contract audit (Deequ-style expectations): one row per
     // declared constraint with its violation count — referential
@@ -2893,22 +2749,7 @@ object SparkEntry {
     // and sums never round), and the correlation is one fixed double
     // tree over them — replicated operand-for-operand in the oracle.
     // The one-pass shape of every feature-covariance scan
-    "q80_grouped_corr" -> ((s, dir) => {
-      val d = t(s, dir, "lineitem").select(col("l_returnflag"),
-        col("l_quantity").cast(DecimalType(18, 2)).as("x"),
-        col("l_extendedprice").cast(DecimalType(18, 2)).as("y"))
-      val n = col("n").cast(DoubleType)
-      def dbl(c: String) = col(c).cast(DoubleType)
-      d.groupBy("l_returnflag")
-        .agg(count(lit(1)).as("n"), sum("x").as("sx"), sum("y").as("sy"),
-          sum(col("x") * col("y")).as("sxy"),
-          sum(col("x") * col("x")).as("sxx"),
-          sum(col("y") * col("y")).as("syy"))
-        .select(col("l_returnflag"), col("n"),
-          round((n * dbl("sxy") - dbl("sx") * dbl("sy")) /
-            sqrt((n * dbl("sxx") - dbl("sx") * dbl("sx")) *
-              (n * dbl("syy") - dbl("sy") * dbl("sy"))), 6).as("corr"))
-    }),
+    oracleEntry("q80_grouped_corr"),
 
     // population-stability-index drift detection (the ML-ops metric
     // behind "did the feature distribution move"): events split into
@@ -3084,9 +2925,7 @@ object SparkEntry {
     // per-user window (partitioned — bounded tasks at any scale); the
     // two LOCF columns ride the same total order (ts, event_id) and
     // the same predicate, so they always come from the same touch row
-    "q70_attribution" -> ((s, dir) => {
-      Engine.registerAll(s, dir)
-      s.sql(
+    "q70_attribution" -> ((s, dir) => sqlOver(s, dir,
         """WITH tagged AS (
           |  SELECT user_id, ts, event_type,
           |    last_value(CASE WHEN event_type <> 'purchase'
@@ -3104,8 +2943,7 @@ object SparkEntry {
           |            THEN 'direct' ELSE touch_type END AS channel,
           |  COUNT(*) AS n_purchases
           |FROM tagged WHERE event_type = 'purchase'
-          |GROUP BY 1""".stripMargin)
-    }),
+          |GROUP BY 1""".stripMargin)),
 
     // EXACT equi-depth histogram (16 buckets over a 6M-row column at
     // sf1): global rank via Ranking.globalRowNumber — range
@@ -3707,14 +3545,7 @@ object SparkEntry {
     // correlated scalar subquery in SELECT: Catalyst de-correlates it
     // into a left outer aggregate join — per-row subqueries never
     // execute row-at-a-time
-    "q57_scalar_subquery" -> ((s, dir) => {
-      t(s, dir, "nation").createOrReplaceTempView("nation_q57")
-      t(s, dir, "customer").createOrReplaceTempView("customer_q57")
-      s.sql("""SELECT n_name,
-              |  (SELECT COUNT(*) FROM customer_q57 c
-              |   WHERE c.c_nationkey = n.n_nationkey) AS n_cust
-              |FROM nation_q57 n""".stripMargin)
-    }),
+    oracleEntry("q57_scalar_subquery"),
 
     // higher-order array functions: transform / filter / aggregate /
     // zip_with over grouped arrays — all evaluated inside the row
@@ -3847,7 +3678,7 @@ object SparkEntry {
 
     "q45_grouping_sets" -> ((s, dir) => {
       t(s, dir, "lineitem").createOrReplaceTempView("li_gs45")
-      // two-level lattice (see q22/q41): the GROUPING SETS Expand runs
+      // two-level lattice (see q41): the GROUPING SETS Expand runs
       // over the ~6 (flag, status) decimal partials, not the corpus
       s.sql("""WITH b45 AS (
               |  SELECT l_returnflag, l_linestatus,
@@ -4019,7 +3850,7 @@ object SparkEntry {
     }),
 
     // CUBE: all grouping-set combinations — q22 covers ROLLUP, this
-    // adds the full lattice. Two-level like q22: one corpus hash-agg to
+    // adds the full lattice. Two-level: one corpus hash-agg to
     // (flag, status) decimal partials (~6 rows), then the 4-way cube
     // Expand runs over those partials, not the 6M-row scan (20.5 s →
     // sub-second at the 10× soak). Decimal partial sums re-aggregate

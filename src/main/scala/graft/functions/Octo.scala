@@ -49,12 +49,10 @@ object Octo {
 
   def regexMatch(s: Column, pattern: String): Column = s.rlike(pattern)
 
-  /** `len` overloads (functions.go:774-831): String → char count,
-    * Array → element count. (Type-directed dispatch isn't possible on
-    * Spark 4's opaque Column, so the overloads are separate functions.)
+  /** `len` over a String (functions.go:774-831): char count. SQL's
+    * type-dispatched `len` is [[graft.plans.OctoFns.OctoLen]].
     */
   def len(c: Column): Column = length(c).cast(LongType)
-  def lenArray(c: Column): Column = size(c).cast(LongType)
 
   // ---- arithmetic ---------------------------------------------------
 
@@ -81,12 +79,6 @@ object Octo {
   def toIntOcto(c: Column): Column = c.cast(LongType)   // non-ANSI: null-on-fail
 
   def toFloatOcto(c: Column): Column = c.cast(DoubleType)
-
-  /** `string(x)` display cast. The reference quotes strings in its
-    * display format (values.go:357-424); we keep plain `cast(string)`
-    * as the engine-level conversion and leave display quoting to sinks.
-    */
-  def toStringOcto(c: Column): Column = c.cast(StringType)
 
   // ---- time ---------------------------------------------------------
 

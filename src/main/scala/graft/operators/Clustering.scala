@@ -84,12 +84,4 @@ object Clustering {
       .withColumn("cluster", nearestCell(col("v"), centroids).cast(LongType))
       .select(col("id").as(idCol), col("cluster"))
   }
-
-  /** Per-cluster profile of a k-means result joined back to its input:
-    * size and the smallest member id (a stable integer signature of the
-    * assignment, convenient for tests and monitoring).
-    */
-  def clusterSizes(assignments: DataFrame, idCol: String = "vec_id"): DataFrame =
-    assignments.groupBy("cluster")
-      .agg(count(lit(1)).as("n_points"), min(col(idCol)).as("min_id"))
 }

@@ -17,12 +17,6 @@ object Sampling {
   def hashKey(id: Column): Column =
     pmod(id.cast("long") * lit(2654435761L), lit(4294967296L))
 
-  /** Deterministic k-row sample: the k rows with the smallest hash key
-    * (distributed top-k via TakeOrderedAndProject, no full sort).
-    */
-  def deterministicSample(df: DataFrame, idCol: String, k: Int): DataFrame =
-    df.orderBy(hashKey(col(idCol)), col(idCol)).limit(k)
-
   /** Stratified sample: up to `perKey` rows per stratum, chosen by hash
     * order. Salted two-phase top-k: a single window over the stratum
     * would sort the WHOLE stratum in one task (a stratum is

@@ -24,13 +24,20 @@ import graft.octo._
 object OctoJson {
 
   /** First-100-line driver inference, like the reference's
-    * `WithPreview()` open (json/impl.go:27-56).
+    * `WithPreview()` open (json/impl.go:27-56). The file is opened the
+    * way [[read]]'s `spark.read.text` opens it — Hadoop filesystem and
+    * codec registry — so a `.json.gz` sample and its scan agree.
     */
-  def infer(path: String): Seq[(String, OType)] = {
+  def infer(spark: SparkSession, path: String): Seq[(String, OType)] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new org.apache.hadoop.fs.Path(path)
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
+      .getCodec(p)).fold[java.io.InputStream](raw)(_.createInputStream(raw))
     // explicit UTF-8: the platform default charset can mis-decode
     // multibyte field names and silently desynchronize inference from
     // Spark's (always-UTF-8) executors
-    val src = scala.io.Source.fromFile(path, "UTF-8")
+    val src = scala.io.Source.fromInputStream(in, "UTF-8")
     try OType.inferJsonl(src.getLines())
     finally src.close()
   }

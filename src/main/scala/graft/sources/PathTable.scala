@@ -16,6 +16,20 @@ import org.apache.spark.sql.functions._
   */
 object PathTable {
 
+  /** What a table spec names — the one grammar both the dialect binder
+    * and [[resolve]] read.
+    */
+  sealed trait Spec
+  /** `stdin.fmt` / `fmt.stdin` (reference: execution/files/stdin.go). */
+  final case class StdinSpec(format: String, opts: Map[String, String]) extends Spec
+  /** `docs.functions`, ... (datasources/docs/database.go:26-121). */
+  final case class DocsSpec(table: String) extends Spec
+  final case class PluginsSpec(table: String) extends Spec
+  /** octosql.yml-configured database: `FROM mydb.mytable` → JDBC. */
+  final case class DatabaseSpec(db: OctoConfig.DbConfig, table: String) extends Spec
+  /** A file or glob read with `format` (a [[read]] format). */
+  final case class FileSpec(path: String, format: String, opts: Map[String, String]) extends Spec
+
   /** Options parsed from a `path?k=v&k2=v2` suffix. Split on the FIRST
     * '?' only: a second '?' (inside an option value, or a typo'd
     * double option block) must not silently discard every option and
@@ -33,35 +47,28 @@ object PathTable {
         }.toMap)
     }
 
-  /** Resolve a table spec to a DataFrame. Accepts `path.ext[?opts]`,
-    * `stdin.ext` (reference: execution/files/stdin.go), or the
-    * `docs.functions` / `docs.aggregates` self-documentation tables
-    * (datasources/docs/database.go:26-121).
+  /** `csv.myfile` format-prefix form (physical.go GetDatasource
+    * database rule): reads file `myfile` with the csv handler.
     */
   private val PrefixForm = "^(csv|tsv|json|parquet|orc|lines|txt|log)\\.(.+)$".r
+  private val TextFormats = Set("csv", "tsv", "json", "lines", "txt", "log")
+  private def linesFormat(f: String): String =
+    if (f == "txt" || f == "log") "lines" else f
 
-  def resolve(spark: SparkSession, spec: String): DataFrame = {
+  def parse(spec: String): Spec = {
     val (path, opts) = splitOpts(spec)
-    if (path.startsWith("stdin."))
-      readStdin(spark, path.stripPrefix("stdin."), opts)
+    val parts = path.split('.')
+    if (parts.length == 2 && (parts(0) == "stdin" || parts(1) == "stdin"))
+      StdinSpec(linesFormat(if (parts(0) == "stdin") parts(1) else parts(0)), opts)
     else if (path.startsWith("docs.") &&
              Docs.TableNames.contains(path.stripPrefix("docs.")))
-      Docs.table(spark, path.stripPrefix("docs."))
+      DocsSpec(path.stripPrefix("docs."))
     else if (path.startsWith("plugins."))
-      Plugins.table(spark, path.stripPrefix("plugins."))
-    else if (path.count(_ == '.') == 1 &&
-             OctoConfig.database(path.split('.')(0)).isDefined)
-      // octosql.yml-configured database: FROM mydb.mytable → JDBC
-      OctoConfig.table(spark,
-        OctoConfig.database(path.split('.')(0)).get, path.split('.')(1))
+      PluginsSpec(path.stripPrefix("plugins."))
+    else if (parts.length == 2 && OctoConfig.database(parts(0)).isDefined)
+      DatabaseSpec(OctoConfig.database(parts(0)).get, parts(1))
     else path match {
-      // format-prefixed names (physical.go GetDatasource database rule):
-      // `csv.myfile` reads file `myfile` with the csv handler;
-      // `lines.stdin` is the lines handler over stdin
-      case PrefixForm(fmt, rest) if rest == "stdin" =>
-        readStdin(spark, if (fmt == "txt" || fmt == "log") "lines" else fmt, opts)
-      case PrefixForm(fmt, rest) if !rest.contains('.') =>
-        read(spark, rest, fmt, opts)
+      case PrefixForm(fmt, rest) if !rest.contains('.') => FileSpec(rest, fmt, opts)
       case _ =>
         // `data.json.gz` → json: Spark's TEXT-based readers decompress
         // by extension via the Hadoop codec registry, so the FORMAT is
@@ -71,21 +78,42 @@ object PathTable {
         // is NOT stripped (the parquet reader on a gzip stream fails
         // with a magic-bytes error, so the suffix stays and resolves
         // to a clear unsupported-format message instead)
-        val textFmts = Set("csv", "tsv", "json", "lines", "txt", "log")
-        val parts = path.split('.')
         val last = parts.last.toLowerCase
-        val ext =
+        val inner = if (parts.length >= 3) parts(parts.length - 2).toLowerCase else ""
+        val format =
           // .warc.gz keeps its own member-aware decompressor (the gzip
           // members ARE the record index) — never the Hadoop codec path
-          if (last == "gz" && parts.length >= 3 &&
-              parts(parts.length - 2).toLowerCase == "warc")
-            "warcgz"
-          else if ((last == "gz" || last == "bz2") && parts.length >= 3 &&
-              textFmts.contains(parts(parts.length - 2).toLowerCase))
-            parts(parts.length - 2).toLowerCase
+          if (last == "gz" && inner == "warc") "warcgz"
+          else if ((last == "gz" || last == "bz2") && TextFormats.contains(inner)) inner
           else last
-        read(spark, path, ext, opts)
+        FileSpec(path, format, opts)
     }
+  }
+
+  /** The formats [[read]] accepts. */
+  private val Readable = TextFormats ++ Set("parquet", "orc", "warc", "warcgz", "tar")
+  private val SpecChars = """[A-Za-z0-9_\-./]+(?:\?[A-Za-z0-9_=&.\-]*)?"""
+
+  /** True when a FROM/JOIN-position token names a table this grammar
+    * reads, rather than a catalog table or view (`orders`, `db.t`).
+    */
+  def isSpec(token: String): Boolean = parse(token) match {
+    case FileSpec(_, format, _) => Readable.contains(format) && token.matches(SpecChars)
+    case _ => true
+  }
+
+  /** Resolve a table spec to a DataFrame: a file path with its format
+    * from the extension or a `fmt.` prefix, plus `?opts`; `stdin.ext`;
+    * `docs.`, `plugins.` and octosql.yml database tables.
+    */
+  def resolve(spark: SparkSession, spec: String): DataFrame = open(spark, parse(spec))
+
+  def open(spark: SparkSession, spec: Spec): DataFrame = spec match {
+    case StdinSpec(format, opts)      => readStdin(spark, format, opts)
+    case DocsSpec(table)              => Docs.table(spark, table)
+    case PluginsSpec(table)           => Plugins.table(spark, table)
+    case DatabaseSpec(db, table)      => OctoConfig.table(spark, db, table)
+    case FileSpec(path, format, opts) => read(spark, path, format, opts)
   }
 
   /** stdin is driver-local by nature: drain it on the driver and
@@ -114,7 +142,7 @@ object PathTable {
       case "tsv" =>
         spark.read.option("header", opts.getOrElse("header", "true"))
           .option("inferSchema", "true").option("sep", "\t").csv(ds)
-      case "lines" | "txt" =>
+      case "lines" =>
         spark.createDataset(lines.zipWithIndex.map { case (t, i) => (i.toLong, t) })
           .toDF("number", "text")
       case other =>

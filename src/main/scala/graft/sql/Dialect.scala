@@ -3,13 +3,16 @@ package graft.sql
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.octo._
-import graft.sources.{Docs, OctoJson, PathTable}
+import graft.sources.{OctoJson, PathTable}
+import OctoSql.isClauseKw
 
-/** Reference-parity front-end for the CLI surface (the strict pipeline
-  * behind `graft.Cli` and the golden-scenario replay).
+/** The SQL frontend: [[prepare]] is the only way dialect text reaches
+  * Catalyst (`graft.Cli`, the golden-scenario replay and the SQL-text
+  * `SparkEntry` queries).
   *
-  * On top of the token rewrites shared with [[OctoSql]], this adds the
-  * behaviors a reference user observes through the CLI:
+  * On top of the token rewrites in [[OctoSql]] and the table-spec
+  * grammar in [[PathTable]], this adds the behaviors a reference user
+  * observes through the CLI:
   *
   *  - output column naming (reference parser.go:120-200, map.go:99-125):
   *    aliases, `col_N` for expressions, `sum_field2` for aggregates of
@@ -59,10 +62,6 @@ object Dialect {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(12)
       .collectFirst { case t: TypecheckException => t }.getOrElse(e)
 
-  // single source of truth with the rewrite layer: a keyword added to
-  // one copy but not the other would desynchronize FROM-clause
-  // detection between binding and naming
-  private val ClauseKw = OctoSql.ClauseKw
   private val JoinKw = Set("JOIN", "LEFT", "RIGHT", "FULL", "OUTER", "INNER",
     "CROSS", "LOOKUP", "ON", "AS", "USING")
   private val AggNames = Set("count", "sum", "avg", "min", "max", "array_agg",
@@ -80,7 +79,6 @@ object Dialect {
   // ---- entry point ---------------------------------------------------
 
   def prepare(spark: SparkSession, sql: String, ctx: Ctx = Ctx()): Prepared = {
-    registerFunctions(spark)
     var tokens = OctoSql.portableRewrites(OctoSql.tokenize(sql))
     checkOuterJoins(tokens)
     val rels = scala.collection.mutable.HashMap[String, RelInfo]()
@@ -382,7 +380,7 @@ object Dialect {
       if (t == ")") depth -= 1
       if (depth == 0 && t.equalsIgnoreCase("ORDER")) orderIdx = i
       if (depth == 0 && orderIdx >= 0 && insertAt < 0 &&
-          (t.equalsIgnoreCase("LIMIT") || t.equalsIgnoreCase("TRIGGER"))) insertAt = i
+          (t.equalsIgnoreCase("LIMIT") || OctoSql.isTriggerClause(tokens, i))) insertAt = i
     }
     if (orderIdx < 0) return tokens
     val extras = names.flatMap(n => Vector(",", " ", s"`$n`", " "))
@@ -435,7 +433,7 @@ object Dialect {
               case "(" => d0 += 1
               case ")" => d0 -= 1
               case x if d0 == 0 && x.equalsIgnoreCase("ON") => on = k0
-              case x if d0 == 0 && ClauseKw.contains(x.toUpperCase) => k0 = tokens.length
+              case _ if d0 == 0 && isClauseKw(tokens, k0) => k0 = tokens.length
               case _ =>
             }
             k0 += 1
@@ -450,7 +448,7 @@ object Dialect {
               !x.startsWith("'") && x != "->" && x != "->*" &&
                 (x.contains("<") || x.contains(">") || x.contains("!="))
             while (k >= 0 && k < tokens.length &&
-                   !(depth == 0 && (ClauseKw.contains(tokens(k).toUpperCase) ||
+                   !(depth == 0 && (isClauseKw(tokens, k) ||
                      JoinKw.contains(tokens(k).toUpperCase) && !tokens(k).equalsIgnoreCase("AS") && !tokens(k).equalsIgnoreCase("ON")))) {
               tokens(k) match {
                 case "(" => depth += 1
@@ -473,80 +471,80 @@ object Dialect {
 
   // ---- table binding -------------------------------------------------
 
-  private def isStdinSpec(t: String): Boolean = {
-    val parts = t.split('?')(0).split('.')
-    parts.length == 2 && (parts(0) == "stdin" || parts(1) == "stdin")
-  }
-
-  /** `csv.myfile` format-prefix form (physical.go database rule). */
-  private val PrefixForm = "^(csv|tsv|json|parquet|lines|txt|log)\\.([^.?]+)$".r
-
   /** Position-aware path-table binding: only tokens in FROM/JOIN/
-    * comma-in-FROM position are treated as tables (a column named
-    * `t.lines` stays a column), and view names carry a content hash so
-    * distinct paths can't alias (ADVICE round 1).
+    * comma-in-FROM position that [[PathTable.isSpec]] accepts are bound
+    * (a column named `t.lines` stays a column). FROM-context is tracked
+    * PER PAREN DEPTH — a parenthesized subquery (with its own
+    * SELECT/FROM) neither ends the outer FROM clause nor leaks its own.
     */
   private def bind(spark: SparkSession, tokens: Vector[String], ctx: Ctx,
                    rels: scala.collection.mutable.Map[String, RelInfo],
-                   validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): Vector[String] =
-    OctoSql.bindWalk(tokens)(t => bindOne(spark, t, ctx, rels, validations))
+                   validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var expectRel = false
+    var depth = 0
+    // per-depth FROM-clause flag; entries above the current depth are
+    // discarded as parens close
+    val inFrom = scala.collection.mutable.Map[Int, Boolean]()
+    tokens.indices.foreach { i =>
+      val t = tokens(i)
+      val up = t.toUpperCase
+      if (t == "(") { depth += 1; expectRel = false }
+      if (t == ")") { inFrom.remove(depth); depth -= 1; expectRel = false }
+      var emit = t
+      if (up == "FROM" || up == "JOIN" || up == "TABLE") {
+        expectRel = true
+        if (up != "TABLE") inFrom(depth) = true
+      } else if (isClauseKw(tokens, i) || up == "SELECT") {
+        inFrom(depth) = false; expectRel = false
+      } else if (t == "," && inFrom.getOrElse(depth, false)) expectRel = true
+      else if (expectRel && !isWs(t) && !t.startsWith("'") && t != "(" && t != ")") {
+        if (PathTable.isSpec(t)) emit = bindOne(spark, t, ctx, rels, validations)
+        expectRel = false
+      }
+      out += emit
+    }
+    out.result()
+  }
 
+  /** View names carry a content hash so distinct paths can't alias. */
+  private def viewNameFor(spec: String): String = {
+    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(spec)).take(8)
+    "pt_" + spec.replaceAll("[^A-Za-z0-9]", "_") + "_" + h
+  }
+
+  /** Bind one table spec as a temp view. The spec grammar is
+    * [[PathTable.parse]]'s; the dialect adds octosql JSON typing
+    * ([[OctoJson]]), stdin from [[Ctx]] and paths relative to its
+    * `baseDir`.
+    */
   private def bindOne(spark: SparkSession, spec: String, ctx: Ctx,
                       rels: scala.collection.mutable.Map[String, RelInfo],
                       validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): String = {
-    val view = OctoSql.viewNameFor(spec)
-    val (pathPart, opts) = spec.split('?') match {
-      case Array(p) => (p, Map.empty[String, String])
-      case Array(p, o) => (p, o.split('&').filter(_.nonEmpty).map { kv =>
-        kv.split("=", 2) match {
-          case Array(k, v) => k -> v
-          case Array(k) => k -> "true"
-        }
-      }.toMap)
-      case parts => (parts.head, Map.empty[String, String])
+    val view = viewNameFor(spec)
+    def octoJson(fields: Seq[(String, OType)], validate: () => Unit, df: DataFrame): DataFrame = {
+      validations += validate
+      rels(view) = RelInfo(fields)
+      df
     }
-    val df: DataFrame =
-      if (pathPart.startsWith("docs.") &&
-          Docs.TableNames.contains(pathPart.stripPrefix("docs.")))
-        Docs.table(spark, pathPart.stripPrefix("docs."))
-      else if (pathPart.startsWith("plugins."))
-        graft.sources.Plugins.table(spark, pathPart.stripPrefix("plugins."))
-      else if (isStdinSpec(pathPart)) {
-        val parts = pathPart.split('.')
-        val format = if (parts(0) == "stdin") parts(1) else parts(0)
+    val df: DataFrame = PathTable.parse(spec) match {
+      case PathTable.StdinSpec(format, opts) =>
         val lines = ctx.stdin.map(_.linesIterator.toSeq)
           .getOrElse(scala.io.Source.stdin.getLines().toSeq)
         if (format == "json") {
           val fields = OctoJson.inferLines(lines)
-          validations += (() => OctoJson.validateLines(lines))
-          val d = OctoJson.readLines(spark, lines, fields)
-          rels(view) = RelInfo(fields)
-          d
+          octoJson(fields, () => OctoJson.validateLines(lines),
+            OctoJson.readLines(spark, lines, fields))
         } else PathTable.readStdinLines(spark, format, lines, opts)
-      } else if (pathPart.count(_ == '.') == 1 &&
-                 graft.sources.OctoConfig.database(pathPart.split('.')(0)).isDefined) {
-        // octosql.yml-configured database: FROM mydb.mytable → JDBC
-        val parts = pathPart.split('.')
-        graft.sources.OctoConfig.table(spark,
-          graft.sources.OctoConfig.database(parts(0)).get, parts(1))
-      } else {
-        val (realPath, ext) = pathPart match {
-          case PrefixForm(fmt, rest) => (rest, fmt)
-          case _ if pathPart.toLowerCase.endsWith(".warc.gz") =>
-            // member-aware decompressor, not the Hadoop codec path
-            (pathPart, "warcgz")
-          case _ => (pathPart, pathPart.split('.').last.toLowerCase)
-        }
-        val resolved =
-          if (realPath.startsWith("/")) realPath else s"${ctx.baseDir}/$realPath"
-        if (ext == "json") {
-          val fields = OctoJson.infer(resolved)
-          validations += (() => OctoJson.validate(spark, resolved))
-          val d = OctoJson.read(spark, resolved, fields)
-          rels(view) = RelInfo(fields)
-          d
-        } else PathTable.read(spark, resolved, ext, opts)
-      }
+      case PathTable.FileSpec(path, format, opts) =>
+        val resolved = if (path.startsWith("/")) path else s"${ctx.baseDir}/$path"
+        if (format == "json") {
+          val fields = OctoJson.infer(spark, resolved)
+          octoJson(fields, () => OctoJson.validate(spark, resolved),
+            OctoJson.read(spark, resolved, fields))
+        } else PathTable.read(spark, resolved, format, opts)
+      case other => PathTable.open(spark, other)
+    }
     if (!rels.contains(view))
       rels(view) = RelInfo(df.schema.fields.toSeq.map(f => f.name -> OType.fromSpark(f.dataType)))
     df.createOrReplaceTempView(view)
@@ -838,7 +836,7 @@ object Dialect {
         case "(" => depth += 1
         case ")" => depth -= 1
         case t if depth == 0 && t.equalsIgnoreCase("FROM") => selEnd = j; fromIdx = j
-        case t if depth == 0 && ClauseKw.contains(t.toUpperCase) => selEnd = j
+        case _ if depth == 0 && isClauseKw(tokens, j) => selEnd = j
         case _ =>
       }
       j += 1
@@ -1051,13 +1049,13 @@ object Dialect {
       if (a >= 0 && tokens(a).equalsIgnoreCase("AS"))
         a = nextNonWs(tokens, a + 1)
       if (a >= 0 && isIdent(tokens(a)) && !JoinKw.contains(tokens(a).toUpperCase) &&
-          !ClauseKw.contains(tokens(a).toUpperCase)) (Some(tokens(a)), a + 1)
+          !isClauseKw(tokens, a)) (Some(tokens(a)), a + 1)
       else (None, after)
     }
     while (i >= 0 && i < tokens.length) {
       val t = tokens(i)
       val up = t.toUpperCase
-      if (depth == 0 && ClauseKw.contains(up)) return out.result()
+      if (depth == 0 && isClauseKw(tokens, i)) return out.result()
       if (t == "(") {
         if (expectRel && depth == 0) {
           val close = OctoSql.matching(tokens, i)

@@ -1,15 +1,10 @@
 package graft.sql
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.sources.PathTable
-
-/** The reference engine's SQL dialect on Spark: a token-level translator
-  * to Spark SQL plus path-as-table view registration. Dialect features
+/** The reference engine's SQL dialect on Spark: a pure token-level
+  * rewrite library to Spark SQL text, with no Spark types (the
+  * frontend that calls it binds path tables). Dialect features
   * covered (reference grammar cites in SURVEY §2 / §7.2):
   *
-  *  - path tables: `FROM people.csv`, `logs.json`, `d.parquet`,
-  *    `notes.lines` (physical/physical.go:65-86) → temp views over
-  *    `PathTable.resolve`
   *  - `LOOKUP JOIN` (sql.y:2096) → plain `JOIN` (identical semantics for
   *    a table RHS; Catalyst plans correlated RHS as lateral)
   *  - `a -> field` / `a ->*` object access (ast.go:1822-1847) →
@@ -31,9 +26,6 @@ import graft.sources.PathTable
   * operators) is common SQL that Spark parses directly.
   */
 object OctoSql {
-
-  private[sql] val PathTableRe =
-    """(?i)([A-Za-z0-9_\-./]+(?:\.(?:csv|tsv|json|lines|txt|log)(?:\.(?:gz|bz2))?|\.parquet|\.warc(?:\.gz)?|\.tar)(?:\?[A-Za-z0-9_=&.\-]*)?)"""
 
   /** Tokenize preserving single-quoted string literals (with '' escape)
     * so rewrites never touch literal contents.
@@ -112,74 +104,27 @@ object OctoSql {
     tokens.length - 1
   }
 
-  private[sql] val ClauseKw = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
+  private val ClauseKw = Set("WHERE", "GROUP", "HAVING", "ORDER", "LIMIT",
     "UNION", "INTERSECT", "EXCEPT", "TRIGGER")
 
-  /** True when a FROM/JOIN-position token names a file/stdin/docs/
-    * plugins table the engine should bind as a temp view.
-    */
-  private[sql] def isPathLike(t: String): Boolean = {
-    val bare = t.split('?')(0)
-    t.matches(PathTableRe) ||
-      bare.matches("^(csv|tsv|json|parquet|lines|txt|log)\\.[^.?]+$") ||
-      { val parts = bare.split('.')
-        parts.length == 2 && (parts(0) == "stdin" || parts(1) == "stdin") } ||
-      (bare.startsWith("docs.") &&
-        graft.sources.Docs.TableNames.contains(bare.stripPrefix("docs."))) ||
-      bare.startsWith("plugins.") ||
-      { // octosql.yml-configured databases: FROM mydb.mytable
-        val parts = bare.split('.')
-        parts.length == 2 && graft.sources.OctoConfig.database(parts(0)).isDefined }
-  }
+  private val TriggerForms = Set("ON", "DELAY", "COUNTING")
 
-  /** The shared position-aware table-binding walk (round-1 ADVICE, one
-    * implementation for both the engine and CLI binders): only tokens
-    * in FROM/JOIN/comma-in-FROM position are offered to `bindFn`, so a
-    * column named `t.lines` stays a column. FROM-context is tracked PER
-    * PAREN DEPTH — a parenthesized subquery (with its own SELECT/FROM)
-    * neither ends the outer FROM clause nor leaks its own.
+  /** A `TRIGGER` token that opens the trigger clause — followed by a
+    * trigger form (ON WATERMARK / DELAY e / COUNTING n,
+    * parser/sqlparser/ast.go:3752-3800) — rather than a column named
+    * `trigger` (SELECT trigger FROM t).
     */
-  private[sql] def bindWalk(tokens: Vector[String])(bindFn: String => String): Vector[String] = {
-    val out = Vector.newBuilder[String]
-    var expectRel = false
-    var depth = 0
-    // per-depth FROM-clause flag; entries above the current depth are
-    // discarded as parens close
-    val inFrom = scala.collection.mutable.Map[Int, Boolean]()
-    tokens.foreach { t =>
-      val up = t.toUpperCase
-      if (t == "(") { depth += 1; expectRel = false }
-      if (t == ")") { inFrom.remove(depth); depth -= 1; expectRel = false }
-      var emit = t
-      if (up == "FROM" || up == "JOIN" || up == "TABLE") {
-        expectRel = true
-        if (up != "TABLE") inFrom(depth) = true
-      } else if (ClauseKw.contains(up) || up == "SELECT") {
-        inFrom(depth) = false; expectRel = false
-      } else if (t == "," && inFrom.getOrElse(depth, false)) expectRel = true
-      else if (expectRel && !isWs(t) && !isStringLit(t) && t != "(" && t != ")") {
-        if (isPathLike(t)) emit = bindFn(t)
-        expectRel = false
-      }
-      out += emit
+  private[sql] def isTriggerClause(tokens: Vector[String], i: Int): Boolean =
+    tokens(i).equalsIgnoreCase("TRIGGER") && {
+      val follow = tokens.indexWhere(x => !isWs(x), i + 1)
+      follow >= 0 && TriggerForms.contains(tokens(follow).toUpperCase)
     }
-    out.result()
-  }
 
-  private[sql] def viewNameFor(spec: String): String = {
-    val h = Integer.toHexString(scala.util.hashing.MurmurHash3.stringHash(spec)).take(8)
-    "pt_" + spec.replaceAll("[^A-Za-z0-9]", "_") + "_" + h
+  /** Token `i` is a [[ClauseKw]] keyword ending the clause before it. */
+  private[sql] def isClauseKw(tokens: Vector[String], i: Int): Boolean = {
+    val up = tokens(i).toUpperCase
+    ClauseKw.contains(up) && (up != "TRIGGER" || isTriggerClause(tokens, i))
   }
-
-  /** Register path-table references as temp views; return rewritten SQL
-    * with view names substituted.
-    */
-  private def bindPathTables(spark: SparkSession, tokens: Vector[String]): Vector[String] =
-    bindWalk(tokens) { t =>
-      val view = viewNameFor(t)
-      PathTable.resolve(spark, t).createOrReplaceTempView(view)
-      view
-    }
 
   /** QUALIFY clause (the Snowflake/DuckDB/BigQuery window filter —
     * beyond the reference's grammar, like the window functions it
@@ -391,7 +336,7 @@ object OctoSql {
   }
 
   /** The portable-SQL front-door rewrites (clauses Spark's parser
-    * lacks), applied together by [[Dialect.prepare]].
+    * lacks), applied together before table binding.
     */
   private[sql] def portableRewrites(tokens: Vector[String]): Vector[String] =
     rewriteDistinctOn(rewriteQualify(rewriteExclude(tokens)))
@@ -424,16 +369,12 @@ object OctoSql {
     }
 
     // strip TRIGGER ... clauses up to the next major keyword — ALL of
-    // them (each UNION branch may carry one), and only when the next
-    // token is a trigger form (ON WATERMARK / DELAY e / COUNTING n,
-    // parser/sqlparser/ast.go:3752-3800): a COLUMN named `trigger`
-    // (SELECT trigger FROM t) must not truncate the query
+    // them (each UNION branch may carry one), and only the clause form:
+    // a COLUMN named `trigger` must not truncate the query
     val majors = Set("GROUP", "ORDER", "HAVING", "LIMIT", "UNION", ")", "WITH")
-    val triggerForms = Set("ON", "DELAY", "COUNTING")
     var trigIdx = tokens.indexWhere(_.equalsIgnoreCase("TRIGGER"))
     while (trigIdx >= 0) {
-      val follow = tokens.indexWhere(x => !isWs(x), trigIdx + 1)
-      if (follow >= 0 && triggerForms.contains(tokens(follow).toUpperCase)) {
+      if (isTriggerClause(tokens, trigIdx)) {
         val end = tokens.indexWhere(t => majors.contains(t.toUpperCase), trigIdx + 1)
         tokens = if (end < 0) tokens.take(trigIdx)
         else tokens.take(trigIdx) ++ tokens.drop(end)
@@ -532,7 +473,7 @@ object OctoSql {
     // analysis ([[graft.sql.Resolver]] via plans.OctoResolve) — token
     // renames can't see types, so only the two genuinely token-level
     // forms remain:
-    //   panic( → raise_error( (functions.go:1135; the Dialect front-end
+    //   panic( → raise_error( (functions.go:1135; the frontend
     //     tags these with their select index first)
     //   unnest( → explode( (a generator, not a scalar function)
     val fnRenames = Map("panic" -> "raise_error")
@@ -587,47 +528,5 @@ object OctoSql {
     tokens = rewriteCalls(tokens)
 
     tokens.mkString
-  }
-
-  /** Translate a reference-dialect query to Spark SQL, registering path
-    * tables on `spark` as a side effect.
-    */
-  def translate(spark: SparkSession, sql: String): String =
-    rewrite(bindPathTables(spark, tokenize(sql)))
-
-  /** Run a reference-dialect query: translate, parse, swap in the
-    * resolver-gated expression forms ([[graft.plans.OctoResolve]]), then
-    * analyze — typecheck failures surface as
-    * [[Dialect.TypecheckException]] like the reference's panics.
-    */
-  def run(spark: SparkSession, sql: String): DataFrame = {
-    Dialect.registerFunctions(spark) // len/parse_time/octo_string
-    // literal typing parity: INTERVAL → DECIMAL(38,9) seconds first, then
-    // float literals → DOUBLE (Spark would type 1.5 as DECIMAL = the
-    // dialect's Duration), same as Dialect.prepare's build pass
-    val tokens = Dialect.floatLiterals(Dialect.intervalLiterals(
-      tokenize(translate(spark, sql))))
-    val plan = graft.plans.OctoResolve.rewritePlan(
-      org.apache.spark.sql.GraftSqlBridge.parse(spark, tokens.mkString))
-    try org.apache.spark.sql.GraftSqlBridge.ofRows(spark, plan)
-    catch { case e: Throwable => throw Dialect.unwrapTypecheck(e) }
-  }
-
-  /** `--describe`: one row per output field {name, type, time_field},
-    * like cmd/describe.go:12-50.
-    */
-  def describe(spark: SparkSession, sql: String): DataFrame = {
-    import spark.implicits._
-    val schema = run(spark, sql).schema
-    schema.fields.map(f =>
-      (f.name, f.dataType.simpleString,
-        f.dataType.typeName == "timestamp")).toSeq
-      .toDF("name", "type", "time_field")
-  }
-
-  /** `--explain`: the optimized + physical plan text. */
-  def explain(spark: SparkSession, sql: String): String = {
-    val qe = run(spark, sql).queryExecution
-    s"== Optimized ==\n${qe.optimizedPlan}\n== Physical ==\n${qe.executedPlan}"
   }
 }

@@ -1130,17 +1130,6 @@ object Streams {
       .start()
   }
 
-  /** DataFrame-level counting trigger: arbitrary key columns, encoded
-    * as a JSON key string (stable order = struct field order) and run
-    * through the typed per-key state machine.
-    */
-  def countingTriggerCountsDF(df: DataFrame, keyCols: Seq[String], n: Int): Dataset[Emit] = {
-    import df.sparkSession.implicits._
-    val keyed = df.select(
-      to_json(struct(keyCols.map(col): _*)).as("k")).as[String]
-    countingTriggerCounts(keyed, n)
-  }
-
   /** Render a retraction stream the way the reference's stream_native
     * sink does (outputs/stream/printer.go:22-67): `+` for emissions,
     * `-` for retractions.

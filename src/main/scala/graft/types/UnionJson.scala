@@ -63,12 +63,6 @@ object UnionJson {
   def castUnion(c: Column, sparkType: String): Column =
     try_variant_get(c, "$", sparkType)
 
-  /** Runtime type assertion: error when no alternative matches —
-    * reference TypeAssertion (execution/expressions.go:48-77).
-    */
-  def assertUnion(c: Column, sparkType: String): Column =
-    variant_get(c, "$", sparkType)
-
   /** JSON display that round-trips each alternative exactly. */
   def unionToJson(c: Column): Column = to_json(c)
 

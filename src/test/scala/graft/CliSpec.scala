@@ -134,6 +134,45 @@ class CliSpec extends SparkSpec {
         """{"value":"apple"}""", """{"value":"pear"}"""), out)
   }
 
+  private def gzip(f: java.io.File, content: String): String = {
+    val out = new java.util.zip.GZIPOutputStream(new java.io.FileOutputStream(f))
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    f.getAbsolutePath
+  }
+
+  test("gzip-compressed json and csv path tables return their rows") {
+    val dir = java.nio.file.Files.createTempDirectory("cli_gz").toFile
+    val j = gzip(new java.io.File(dir, "data.json.gz"),
+      "{\"k\": \"a\", \"v\": 1}\n{\"k\": \"b\", \"v\": 2.5}\n")
+    val (outJ, errJ, codeJ) = run(s"SELECT k, v FROM $j ORDER BY k", "--output", "csv")
+    assert(codeJ == 0, s"stderr: $errJ")
+    assert(outJ == "k,v\na,1\nb,2.5\n", outJ)
+    val c = gzip(new java.io.File(dir, "data.csv.gz"), "k,n\nx,3\ny,4\n")
+    val (outC, errC, codeC) = run(s"SELECT k, n FROM $c ORDER BY k", "--output", "csv")
+    assert(codeC == 0, s"stderr: $errC")
+    assert(outC == "k,n\nx,3\ny,4\n", outC)
+  }
+
+  test("columns named trigger and interval select through the CLI") {
+    val f = java.nio.file.Files.createTempFile("cli_trig", ".json")
+    java.nio.file.Files.writeString(f,
+      "{\"trigger\": 1, \"interval\": 5}\n{\"trigger\": 2, \"interval\": 7}\n")
+    val (out, err, code) =
+      run(s"SELECT trigger, interval FROM $f ORDER BY trigger", "--output", "csv")
+    assert(code == 0, s"stderr: $err")
+    assert(out == "trigger,interval\n1,5\n2,7\n", out)
+  }
+
+  test("--describe lists the output names and types") {
+    val f = java.nio.file.Files.createTempFile("cli_desc", ".json")
+    java.nio.file.Files.writeString(f,
+      "{\"k\": \"a\", \"v\": 1}\n{\"k\": \"b\", \"v\": 2}\n")
+    val (out, err, code) =
+      run(s"SELECT * FROM $f", "--describe", "--output", "csv")
+    assert(code == 0, s"stderr: $err")
+    assert(out == "name,type,time_field\nk,String,false\nv,Float,false\n", out)
+  }
+
   test("query flags still parse with flags before the query") {
     val (out, err, code) = run("-o", "json", "SELECT 1 AS a")
     assert(code == 0, s"stderr: $err")

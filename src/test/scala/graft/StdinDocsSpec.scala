@@ -1,9 +1,11 @@
 package graft
 
 import graft.sources.{Docs, PathTable}
-import graft.sql.OctoSql
+import graft.sql.Dialect
 
 class StdinDocsSpec extends SparkSpec {
+
+  private def run(sql: String) = Dialect.prepare(spark, sql).df
 
   test("stdin.json reads driver stdin (stdin/json.in scenario)") {
     val orig = System.in
@@ -21,7 +23,7 @@ class StdinDocsSpec extends SparkSpec {
     try {
       System.setIn(new java.io.ByteArrayInputStream(
         (1 to 100).mkString("\n").getBytes))
-      val df = OctoSql.run(spark,
+      val df = run(
         "SELECT SUM(int(text)) AS s FROM stdin.lines")
       assert(df.collect().head.getLong(0) == 5050L)
     } finally System.setIn(orig)
@@ -43,18 +45,18 @@ class StdinDocsSpec extends SparkSpec {
     assert(ag == expectedAg && ag.length == 10)
     // per-descriptor signature tables (docs/function_signatures.go,
     // docs/aggregate_signatures.go), reachable through dialect SQL
-    val sumSigs = OctoSql.run(spark,
+    val sumSigs = run(
       "SELECT argument_type FROM docs.aggregate_signatures WHERE name = 'sum'")
       .collect().map(_.getString(0)).toSeq
     assert(sumSigs == Seq("Int", "Float", "Duration"))
-    val substrSigs = OctoSql.run(spark,
+    val substrSigs = run(
       "SELECT argument_types, output_type FROM docs.function_signatures WHERE name = 'substr'")
       .collect()
     assert(substrSigs.length == 2)
     assert(substrSigs.map(_.getSeq[String](0).toList).toSet ==
       Set(List("String", "Int"), List("String", "Int", "Int")))
     assert(substrSigs.forall(_.getString(1) == "String"))
-    val viaSql = OctoSql.run(spark,
+    val viaSql = run(
       "SELECT name FROM docs.aggregates WHERE name = 'array_agg'")
     assert(viaSql.count() == 1)
   }
@@ -62,14 +64,14 @@ class StdinDocsSpec extends SparkSpec {
   test("plugins meta-datasource tables (datasources/plugins parity)") {
     // installed tables list the built-in connectors; repo views are
     // empty with the reference's schemas (no plugin RPC, zero egress)
-    val installed = OctoSql.run(spark,
+    val installed = run(
       "SELECT name FROM plugins.installed_plugins").collect().map(_.getString(0))
     assert(installed.toSet.contains("parquet") && installed.toSet.contains("jdbc"))
-    assert(OctoSql.run(spark, "SELECT * FROM plugins.available_plugins").count() == 0)
-    val vers = OctoSql.run(spark,
+    assert(run("SELECT * FROM plugins.available_plugins").count() == 0)
+    val vers = run(
       "SELECT plugin_name, version FROM plugins.installed_versions")
     assert(vers.count() == installed.length)
-    assert(OctoSql.run(spark, "SELECT * FROM plugins.repositories").columns.toSeq ==
+    assert(run("SELECT * FROM plugins.repositories").columns.toSeq ==
       Seq("slug", "name", "description"))
   }
 }
