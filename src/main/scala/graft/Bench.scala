@@ -181,13 +181,9 @@ object Bench {
     // dir from an interrupted run is rewritten, not trusted
     if (!new java.io.File(csvDir, "_SUCCESS").exists())
       li.write.option("header", "true").mode("overwrite").csv(csvDir)
-    // schema inference once, outside the timed region: the reference
-    // samples 100 rows (~free); Spark's inferSchema is a full pass, so
-    // hoist it as a catalog lookup would
-    val csvSchema = graft.sources.PathTable.read(spark, csvDir, "csv").schema
     def csvFlagship(): Double = {
       val t0 = System.nanoTime()
-      spark.read.schema(csvSchema).option("header", "true").csv(csvDir)
+      graft.sources.PathTable.read(spark, csvDir, "csv")
         .groupBy("l_returnflag")
         .agg(org.apache.spark.sql.functions.count(
           org.apache.spark.sql.functions.lit(1)),

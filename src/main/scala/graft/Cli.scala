@@ -4,6 +4,7 @@ import java.io.PrintStream
 import org.apache.spark.sql.SparkSession
 import graft.sql.Dialect
 import graft.octo.Formats
+import graft.sources.PathTable
 
 /** CLI entry point mirroring the reference's `octosql "<SQL>"` surface
   * (cmd/root.go): run a dialect query over file tables and print in one
@@ -212,18 +213,22 @@ object Cli {
     if (!Outputs.contains(args.output))
       return fail(err, s"invalid output format: '${args.output}'")
     try {
-      val prep0 = Dialect.prepare(spark, args.sql, Dialect.Ctx(baseDir, stdin))
-      // reference precedence (cmd/root.go): describe wins over explain.
-      // --explain 1|2 emits the optimized physical plan as graphviz dot
-      // (physical/explain.go; 2 adds type info), like the reference's
-      // `dot -Tpng` pipeline but printing the dot source.
-      if (!args.describe && args.explain >= 1) {
-        out.print(graft.octo.DotPlan.render(
-          prep0.df.queryExecution.executedPlan, args.explain >= 2))
-        return 0
+      val ctx = Dialect.Ctx(baseDir, stdin)
+      def answer(wholeFileCsv: Boolean): String = {
+        val prep = Dialect.prepare(spark, args.sql, ctx, wholeFileCsv)
+        // reference precedence (cmd/root.go): describe wins over explain.
+        // --explain 1|2 emits the optimized physical plan as graphviz dot
+        // (physical/explain.go; 2 adds type info), like the reference's
+        // `dot -Tpng` pipeline but printing the dot source.
+        if (!args.describe && args.explain >= 1)
+          graft.octo.DotPlan.render(prep.df.queryExecution.executedPlan, args.explain >= 2)
+        else Formats.render(if (args.describe) Formats.describeRows(prep) else prep, args.output)
       }
-      val prep = if (args.describe) Formats.describeRows(prep0) else prep0
-      out.print(Formats.render(prep, args.output))
+      // a CSV table's first rows under-typed a column (PathTable.read):
+      // nothing is printed yet, so run it once more with whole-file types
+      out.print(
+        try answer(wholeFileCsv = false)
+        catch { case e: Throwable if PathTable.isCsvSampleMisfit(e) => answer(wholeFileCsv = true) })
       0
     } catch {
       case e: Dialect.TypecheckException =>

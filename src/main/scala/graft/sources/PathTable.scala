@@ -1,7 +1,15 @@
 package graft.sources
 
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.io.compress.CompressionCodecFactory
+import org.apache.spark.SparkThrowable
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.{CSVInferSchema, CSVOptions}
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{DataType, DecimalType, NullType, StructType}
 
 /** Path-as-table resolution: the reference treats `people.csv`,
   * `logs.json`, `data.parquet`, `notes.txt` (lines) as table names
@@ -9,10 +17,16 @@ import org.apache.spark.sql.functions._
   * `?header=false`, `?sep=x`, `ext.path` overrides
   * (parser/parser.go:321-356).
   *
-  * Spark-first: each resolves to a `DataFrameReader` call, so schema
-  * inference, parallel IO, predicate pushdown and column pruning are the
-  * built-in ones. The JSON worker pool / CSV sampling machinery of the
-  * reference is subsumed by Spark's distributed readers.
+  * Spark-first: each resolves to a `DataFrameReader` call, so parallel
+  * IO, predicate pushdown and column pruning are the built-in ones. Like
+  * the reference (datasources/csv/impl.go:36-130), a CSV/TSV file is
+  * typed from its header and first [[CsvSampleRows]] rows, read on the
+  * driver and folded through Spark's own CSV inference, so a query scans
+  * the file once; the scan is FAILFAST, so a later value that does not
+  * fit its sampled type fails the query ([[isCsvSampleMisfit]]) instead
+  * of reading as null. `graft.Cli` then re-runs it with whole-file
+  * inference (`inferSchema`), which is also used when the sample cannot
+  * type every column ([[CsvTyping]]).
   */
 object PathTable {
 
@@ -136,12 +150,11 @@ object PathTable {
     val ds = spark.createDataset(lines)
     format match {
       case "json" => spark.read.json(ds)
-      case "csv" =>
-        spark.read.option("header", opts.getOrElse("header", "true"))
-          .option("inferSchema", "true").csv(ds)
-      case "tsv" =>
-        spark.read.option("header", opts.getOrElse("header", "true"))
-          .option("inferSchema", "true").option("sep", "\t").csv(ds)
+      case "csv" | "tsv" =>
+        // every line is already here: type them all, exactly, no job
+        val options = csvOptions(format, opts)
+        spark.read.schema(csvTypes(spark, lines.iterator, options, Int.MaxValue).schema)
+          .options(options).csv(ds)
       case "lines" =>
         spark.createDataset(lines.zipWithIndex.map { case (t, i) => (i.toLong, t) })
           .toDF("number", "text")
@@ -150,16 +163,25 @@ object PathTable {
     }
   }
 
+  /** Read a file or glob as a table. A CSV/TSV table is typed from a
+    * sample unless `wholeFileCsv` asks for Spark's whole-file inference
+    * (the retry of a query whose sample under-typed a column).
+    */
   def read(spark: SparkSession, path: String, format: String,
-           opts: Map[String, String] = Map.empty): DataFrame = format match {
-    case "csv" =>
-      spark.read
-        .option("header", opts.getOrElse("header", "true"))
-        .option("inferSchema", "true")
-        .option("sep", opts.getOrElse("sep", ","))
-        .csv(path)
-    case "tsv" =>
-      read(spark, path, "csv", opts + ("sep" -> "\t"))
+           opts: Map[String, String] = Map.empty,
+           wholeFileCsv: Boolean = false): DataFrame = format match {
+    case "csv" | "tsv" =>
+      val options = csvOptions(format, opts)
+      val sample = if (wholeFileCsv) None else Some(sampleCsv(spark, path, options))
+      sample.filter(_.typed) match {
+        case Some(t) if t.exhausted => // the sample is the whole input
+          spark.read.schema(t.schema).options(options).csv(path)
+        case Some(t) =>
+          spark.read.format(classOf[SampledCsvFormat].getName).schema(t.schema)
+            .options(options ++ SampledScan).load(path)
+        case None =>
+          spark.read.options(options + ("inferSchema" -> "true")).csv(path)
+      }
     case "json" => // JSONLines, schema merged across sampled records.
       // Reference parity: octosql infers every JSON number as Float
       // (datasources/json/impl.go:83-89); Spark infers integers as
@@ -192,6 +214,121 @@ object PathTable {
     case other =>
       throw new IllegalArgumentException(s"unsupported table format: $other")
   }
+
+  /** Rows a CSV/TSV file is typed from, as in the reference. */
+  val CsvSampleRows = 100
+
+  /** The reader options of a `csv`/`tsv` table: header on unless
+    * `?header=false`, `?sep=x`; tsv is tab-separated.
+    */
+  private def csvOptions(format: String, opts: Map[String, String]): Map[String, String] =
+    Map("header" -> opts.getOrElse("header", "true"),
+      "sep" -> (if (format == "tsv") "\t" else opts.getOrElse("sep", ",")))
+
+  /** Scan options for a sampled schema: a value must parse as its
+    * column's sampled type, as inference's own parsers take it. FAILFAST
+    * turns a misfit into an error, not a null; without the fallback
+    * parser a date column no longer takes `2024-01-05 10:30` as a
+    * truncated date (inference types that value a timestamp).
+    */
+  private val SampledScan = Map("mode" -> "FAILFAST", "enableDateTimeParsingFallback" -> "false")
+
+  /** A CSV schema from a driver-side fold: whether every column saw a
+    * value and took a type a sampled scan can check (a decimal column
+    * cannot: its parser rounds a later fraction that inference would
+    * type double), and whether the lines ran out before the row limit.
+    */
+  private final case class CsvTyping(schema: StructType, typed: Boolean, exhausted: Boolean)
+
+  /** Type CSV lines on the driver with Spark's own inference lattice —
+    * `CSVInferSchema.inferRowType` folded over at most `limit` data rows,
+    * then `toStructFields`, header names through `CSVUtils.makeSafeHeader`,
+    * with the `CSVOptions` and session conf the reader builds. It is the
+    * fold `inferSchema` runs as a job, so lines read to their end type
+    * exactly as Spark types them. As there, empty lines are skipped and
+    * the first line is the header (or sets the width under
+    * `header=false`); with a header, lines equal to it are skipped.
+    */
+  private def csvTypes(spark: SparkSession, lines: Iterator[String],
+                       options: Map[String, String], limit: Int): CsvTyping = {
+    val conf = spark.sessionState.conf
+    val parsed = new CSVOptions(options, conf.csvColumnPruning, conf.sessionLocalTimeZone)
+    val parser = new CsvParser(parsed.asParserSettings)
+    val nonEmpty = lines.filter(_.trim.nonEmpty)
+    nonEmpty.nextOption().flatMap(l => Option(parser.parseLine(l)).map(l -> _)) match {
+      case None => CsvTyping(new StructType(), typed = false, exhausted = true)
+      case Some((firstLine, firstRow)) =>
+        val header = CSVUtils.makeSafeHeader(firstRow, conf.caseSensitiveAnalysis, parsed)
+        val rows =
+          if (parsed.headerFlag) nonEmpty.filter(_ != firstLine)
+          else Iterator(firstLine) ++ nonEmpty
+        val infer = new CSVInferSchema(parsed)
+        var types = Array.fill[DataType](header.length)(NullType)
+        var n = 0
+        SQLConf.withExistingConf(conf) {
+          while (n < limit && rows.hasNext) {
+            types = infer.inferRowType(types, parser.parseLine(rows.next()))
+            n += 1
+          }
+        }
+        CsvTyping(StructType(infer.toStructFields(types, header)),
+          typed = !types.exists(t => t == NullType || t.isInstanceOf[DecimalType]),
+          exhausted = !rows.hasNext)
+    }
+  }
+
+  /** Type a CSV path from its first [[CsvSampleRows]] rows. The files
+    * are the ones Spark's file index lists (a glob's matches; a
+    * directory's files, recursively, without `_`/`.` names), largest
+    * first as Spark's inference orders them, so the header is the one
+    * it would take; each opens as [[textSource]] opens it.
+    */
+  private def sampleCsv(spark: SparkSession, path: String,
+                        options: Map[String, String]): CsvTyping = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val p = new Path(path)
+    val fs = p.getFileSystem(conf)
+    def hidden(s: FileStatus) = {
+      val n = s.getPath.getName
+      (n.startsWith("_") && !n.contains("=")) || n.startsWith(".")
+    }
+    def files(s: FileStatus): Seq[FileStatus] =
+      if (s.isDirectory) fs.listStatus(s.getPath).toSeq.filterNot(hidden).flatMap(files)
+      else Seq(s)
+    val ordered = Option(fs.globStatus(p)).toSeq.flatten.flatMap(files)
+      .sortBy(s => (-s.getLen, s.getPath.toString))
+    val opened = scala.collection.mutable.ArrayBuffer[scala.io.Source]()
+    val lines = ordered.iterator.flatMap { s =>
+      val src = textSource(spark, s.getPath); opened += src; src.getLines()
+    }
+    try csvTypes(spark, lines, options, CsvSampleRows)
+    finally opened.foreach(_.close())
+  }
+
+  /** A text file opened the way Spark's text-based readers open it —
+    * Hadoop filesystem and codec registry — so a driver-side sample of
+    * `x.csv.gz` or `x.json.gz` reads the bytes the scan reads. Explicit
+    * UTF-8: the platform default charset can mis-decode multibyte names
+    * and silently desynchronize the sample from Spark's executors.
+    */
+  private[sources] def textSource(spark: SparkSession, p: Path): scala.io.Source = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val raw = p.getFileSystem(conf).open(p)
+    val in = Option(new CompressionCodecFactory(conf).getCodec(p))
+      .fold[java.io.InputStream](raw)(_.createInputStream(raw))
+    scala.io.Source.fromInputStream(in, "UTF-8")
+  }
+
+  /** True when `e` is, or was caused by, a FAILFAST scan's malformed
+    * record: how a sampled CSV scan fails on a value that does not fit
+    * its sampled type (or on a ragged row).
+    */
+  def isCsvSampleMisfit(e: Throwable): Boolean =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(12).exists {
+      case t: SparkThrowable =>
+        Option(t.getCondition).exists(_.startsWith("MALFORMED_RECORD_IN_PARSING"))
+      case _ => false
+    }
 
   /** Per-file line ordinals without a single-task global window.
     *

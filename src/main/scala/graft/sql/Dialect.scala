@@ -36,7 +36,13 @@ import OctoSql.isClauseKw
   */
 object Dialect {
 
-  case class Ctx(baseDir: String = ".", stdin: Option[String] = None)
+  case class Ctx(baseDir: String = ".", stdin: Option[String] = None) {
+    /** stdin's lines, drained once: a re-run of the query on the same
+      * context ([[prepare]]'s `wholeFileCsv`) binds the same lines.
+      */
+    private[sql] lazy val stdinLines: Seq[String] =
+      stdin.map(_.linesIterator.toSeq).getOrElse(scala.io.Source.stdin.getLines().toSeq)
+  }
 
   /** Per-relation schema as the dialect tracks it (column octosql types
     * + the watermarked time field, if any).
@@ -78,12 +84,16 @@ object Dialect {
 
   // ---- entry point ---------------------------------------------------
 
-  def prepare(spark: SparkSession, sql: String, ctx: Ctx = Ctx()): Prepared = {
+  /** Bind and plan a dialect query. CSV/TSV path tables are typed from
+    * a sample unless `wholeFileCsv` (see [[PathTable.read]]).
+    */
+  def prepare(spark: SparkSession, sql: String, ctx: Ctx = Ctx(),
+              wholeFileCsv: Boolean = false): Prepared = {
     var tokens = OctoSql.portableRewrites(OctoSql.tokenize(sql))
     checkOuterJoins(tokens)
     val rels = scala.collection.mutable.HashMap[String, RelInfo]()
     val validations = Seq.newBuilder[() => Unit]
-    tokens = bind(spark, tokens, ctx, rels, validations)
+    tokens = bind(spark, tokens, ctx, wholeFileCsv, rels, validations)
     tokens = rewriteAsofJoins(spark, tokens)
     tokens = rewriteTvfs(spark, tokens, rels)
     val named = nameSelect(spark, tokens, rels.toMap)
@@ -477,7 +487,7 @@ object Dialect {
     * PER PAREN DEPTH — a parenthesized subquery (with its own
     * SELECT/FROM) neither ends the outer FROM clause nor leaks its own.
     */
-  private def bind(spark: SparkSession, tokens: Vector[String], ctx: Ctx,
+  private def bind(spark: SparkSession, tokens: Vector[String], ctx: Ctx, wholeFileCsv: Boolean,
                    rels: scala.collection.mutable.Map[String, RelInfo],
                    validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): Vector[String] = {
     val out = Vector.newBuilder[String]
@@ -499,7 +509,7 @@ object Dialect {
         inFrom(depth) = false; expectRel = false
       } else if (t == "," && inFrom.getOrElse(depth, false)) expectRel = true
       else if (expectRel && !isWs(t) && !t.startsWith("'") && t != "(" && t != ")") {
-        if (PathTable.isSpec(t)) emit = bindOne(spark, t, ctx, rels, validations)
+        if (PathTable.isSpec(t)) emit = bindOne(spark, t, ctx, wholeFileCsv, rels, validations)
         expectRel = false
       }
       out += emit
@@ -518,7 +528,7 @@ object Dialect {
     * ([[OctoJson]]), stdin from [[Ctx]] and paths relative to its
     * `baseDir`.
     */
-  private def bindOne(spark: SparkSession, spec: String, ctx: Ctx,
+  private def bindOne(spark: SparkSession, spec: String, ctx: Ctx, wholeFileCsv: Boolean,
                       rels: scala.collection.mutable.Map[String, RelInfo],
                       validations: scala.collection.mutable.Builder[() => Unit, Seq[() => Unit]]): String = {
     val view = viewNameFor(spec)
@@ -529,8 +539,7 @@ object Dialect {
     }
     val df: DataFrame = PathTable.parse(spec) match {
       case PathTable.StdinSpec(format, opts) =>
-        val lines = ctx.stdin.map(_.linesIterator.toSeq)
-          .getOrElse(scala.io.Source.stdin.getLines().toSeq)
+        val lines = ctx.stdinLines
         if (format == "json") {
           val fields = OctoJson.inferLines(lines)
           octoJson(fields, () => OctoJson.validateLines(lines),
@@ -542,7 +551,7 @@ object Dialect {
           val fields = OctoJson.infer(spark, resolved)
           octoJson(fields, () => OctoJson.validate(spark, resolved),
             OctoJson.read(spark, resolved, fields))
-        } else PathTable.read(spark, resolved, format, opts)
+        } else PathTable.read(spark, resolved, format, opts, wholeFileCsv)
       case other => PathTable.open(spark, other)
     }
     if (!rels.contains(view))

@@ -171,7 +171,103 @@ class CliSpec extends SparkSpec {
       run(s"SELECT * FROM $f", "--describe", "--output", "csv")
     assert(code == 0, s"stderr: $err")
     assert(out == "name,type,time_field\nk,String,false\nv,Float,false\n", out)
+    // a CSV table describes with the types of its first 100 rows, as
+    // octosql's does: v holds 2.5 only at row 150
+    val c = csv("desc.csv", "k,v", n => if (n == 150) s"$n,2.5" else s"$n,$n")
+    val (outC, errC, codeC) = run(s"SELECT * FROM $c", "--describe", "--output", "csv")
+    assert(codeC == 0, s"stderr: $errC")
+    assert(outC == "name,type,time_field\nk,Int,false\nv,Int,false\n", outC)
   }
+
+  // ---- CSV tables typed from a 100-row sample ------------------------
+
+  private lazy val csvDir = java.nio.file.Files.createTempDirectory("cli_csv").toFile
+
+  /** A 200-row CSV file: `header`, then `row(n)` for n = 1..200. */
+  private def csv(name: String, header: String, row: Int => String): String = {
+    val f = new java.io.File(csvDir, name)
+    java.nio.file.Files.writeString(f.toPath, (header +: (1 to 200).map(row)).mkString("\n") + "\n")
+    f.getAbsolutePath
+  }
+
+  /** `sql` through `Cli.execute`; asserts it equals the answer with
+    * whole-file CSV inference (the typing before the sample) and
+    * returns it.
+    */
+  private def sameAsWholeFile(sql: String, output: String = "csv"): String = {
+    val (out, err, code) = run(sql, "--output", output)
+    assert(code == 0, s"stderr: $err")
+    val whole = graft.octo.Formats.render(
+      graft.sql.Dialect.prepare(spark, sql, graft.sql.Dialect.Ctx(), wholeFileCsv = true), output)
+    assert(out == whole, s"sampled:\n$out\nwhole-file:\n$whole")
+    out
+  }
+
+  test("csv tables answer as whole-file inference does: typed, late-widening, ragged, late-filled") {
+    val typed = csv("typed.csv", "i,d,ts,b,s", n =>
+      f"$n,${n * 1.5},2024-01-${n % 28 + 1}%02d 10:00:00,${n % 2 == 0},w$n")
+    val out = sameAsWholeFile(
+      s"SELECT b, COUNT(*) AS n, SUM(i) AS si, MAX(d) AS md, MAX(ts) AS mt FROM $typed GROUP BY b ORDER BY b")
+    assert(out.linesIterator.toSeq == Seq("b,n,si,md,mt",
+      "false,100,10000,298.5,2024-01-28T10:00:00Z", "true,100,10100,300,2024-01-27T10:00:00Z"), out)
+    // an int column that holds 2.5 at row 150: the sampled scan fails,
+    // the CLI re-runs with whole-file types
+    val late = csv("late.csv", "k,v", n => if (n == 150) s"$n,2.5" else s"$n,$n")
+    assert(sameAsWholeFile(s"SELECT SUM(v) AS s FROM $late") == "s\n19952.5\n")
+    // a ragged row after row 100
+    val ragged = csv("ragged.csv", "k,v,w", n => if (n == 130) s"$n,7" else s"$n,$n,x")
+    assert(sameAsWholeFile(s"SELECT k, v, w FROM $ragged WHERE k >= 129 AND k <= 131 ORDER BY k")
+      == "k,v,w\n129,129,x\n130,7,\n131,131,x\n")
+    // empty in the first 100 rows, filled later: whole-file typing
+    val filled = csv("filled.csv", "k,v", n => if (n > 100) s"$n,$n" else s"$n,")
+    assert(sameAsWholeFile(s"SELECT COUNT(v) AS c, SUM(v) AS s FROM $filled") == "c,s\n100,15050\n")
+  }
+
+  test("csv tables answer as whole-file inference does: ?header=false, odd header names, part files, .csv.gz") {
+    val nh = csv("nh.csv", "0,a,true", n => s"$n,${if (n == 160) "x" else n.toString},${n % 2 == 0}")
+    sameAsWholeFile(s"SELECT _c0, _c1, _c2 FROM $nh?header=false WHERE _c0 >= 158 ORDER BY _c0", "json")
+    val names = csv("names.csv", "a,a,,b", n => s"$n,x$n,$n.5,")
+    sameAsWholeFile(s"SELECT * FROM $names WHERE a0 <= 3")
+    val parts = new java.io.File(csvDir, "parts.csv").getAbsolutePath
+    spark.read.option("header", "true").option("inferSchema", "true").csv(typedSource)
+      .repartition(3).write.option("header", "true").mode("overwrite").csv(parts)
+    assert(sameAsWholeFile(s"SELECT COUNT(*) AS n, SUM(v) AS s FROM $parts") == "n,s\n200,19952.5\n")
+    val gz = gzip(new java.io.File(csvDir, "late.csv.gz"),
+      java.nio.file.Files.readString(java.nio.file.Paths.get(typedSource)))
+    assert(sameAsWholeFile(s"SELECT COUNT(*) AS n, SUM(v) AS s FROM $gz") == "n,s\n200,19952.5\n")
+  }
+
+  test("a query re-run with whole-file csv types binds the stdin it already read") {
+    val late = csv("late_join.csv", "k,v", n => if (n == 150) s"$n,2.5" else s"$n,$n")
+    val orig = System.in
+    try {
+      System.setIn(new java.io.ByteArrayInputStream("k,tag\n150,a\n151,b\n".getBytes("UTF-8")))
+      val (out, err, code) = run(
+        s"SELECT s.tag, l.v FROM stdin.csv s JOIN $late l ON s.k = l.k ORDER BY s.tag", "--output", "csv")
+      assert(code == 0, s"stderr: $err")
+      assert(out == "tag,v\na,2.5\nb,151\n", out)
+    } finally System.setIn(orig)
+  }
+
+  test("random csv heads and tails answer as whole-file inference does") {
+    // each column draws its first 100 values from one kind and the rest
+    // from another, so the sample under-types, widens or fits
+    val kinds: Seq[Int => String] = Seq(
+      n => n.toString, n => s"${n}000000000", n => s"$n.25", n => "",
+      n => f"2024-02-${n % 28 + 1}%02d", n => f"2024-02-${n % 28 + 1}%02d 08:${n % 60}%02d:00",
+      n => (n % 3 == 0).toString, n => s"w$n", n => s"9${n}000000000000000000", n => "NaN",
+      n => "2024")
+    val rnd = new scala.util.Random(7)
+    (1 to 20).foreach { i =>
+      val cols = Seq.fill(3)((kinds(rnd.nextInt(kinds.size)), kinds(rnd.nextInt(kinds.size))))
+      val f = csv(s"rand$i.csv", "k,a,b,c", n =>
+        (n.toString +: cols.map { case (head, tail) => (if (n <= 100) head else tail)(n) }).mkString(","))
+      sameAsWholeFile(s"SELECT * FROM $f WHERE k % 10 = 0 ORDER BY k")
+    }
+  }
+
+  /** 200 rows whose int column v holds 2.5 at row 150. */
+  private lazy val typedSource = csv("source.csv", "k,v", n => if (n == 150) s"$n,2.5" else s"$n,$n")
 
   test("query flags still parse with flags before the query") {
     val (out, err, code) = run("-o", "json", "SELECT 1 AS a")
