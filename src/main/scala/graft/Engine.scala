@@ -50,13 +50,10 @@ object Engine {
       // testdata events.parquet uses TIMESTAMP(NANOS) which Spark's
       // vectorized reader rejects; read as long and convert (table()).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-profile streaming state width (see
-      // Streams.withStatePartitions): stateful operators pin
-      // shuffle.partitions at query start, and 32 state-store
-      // partitions are pure per-batch overhead for a single-node
-      // drain. On a cluster, override to O(total executor cores) via
-      // SPARK_GRAFT_CONF — same scaling rule as shuffle.partitions.
-      .config("spark.graft.streaming.statePartitions", "8")
+      // no streaming state width here: each Streams drain sizes its
+      // stateful operators from the bytes it streams
+      // (Streams.withStatePartitions); SPARK_GRAFT_CONF
+      // spark.graft.streaming.statePartitions=N pins a width instead.
       // r11 (guide §2.2 "M×R block growth"): force the sort-based
       // shuffle writer (UnsafeShuffleWriter — one sorted file + index
       // per MAP task) instead of BypassMergeSortShuffleWriter, which

@@ -2,11 +2,117 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryListener, StreamingQueryProgress}
+import org.apache.spark.sql.streaming.StreamingQueryListener._
+import scala.jdk.CollectionConverters._
 import graft.streaming.Streams
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The progress reports of every batch the query named `name` ran
+    * while `run` drained it. A listener collects them until the query's
+    * terminated event, which the listener bus delivers after all of its
+    * progress events.
+    */
+  private def progressOf(name: String)(run: => Unit): Seq[StreamingQueryProgress] = {
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[StreamingQueryProgress]
+    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]
+    val terminated = new java.util.concurrent.CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit =
+        if (e.name == name) ids.add(e.id)
+      def onQueryProgress(e: QueryProgressEvent): Unit =
+        if (e.progress.name == name) progress.add(e.progress)
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        if (ids.contains(e.id)) terminated.countDown()
+    }
+    spark.streams.addListener(listener)
+    try {
+      run
+      assert(terminated.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        s"no terminated event for $name")
+    } finally spark.streams.removeListener(listener)
+    progress.asScala.toSeq
+  }
+
+  private val NoData = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+  /** The session's explicitly set values of the confs a drain scopes. */
+  private def drainConfs: Map[String, String] =
+    spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
+      k == "spark.sql.shuffle.partitions" || k == NoData }
+
+  test("a KB-scale drain runs its stateful operator at width 1") {
+    val before = drainConfs
+    val ps = progressOf("spec_width") {
+      Streams.runTumblingAgg(spark, s"$sf/events.parquet", "ts", "1 hour",
+        Seq("event_type"), Seq(count(lit(1)).as("n")), queryName = "spec_width")
+    }
+    assert(ps.nonEmpty)
+    assert(ps.forall(_.stateOperators.map(_.numShufflePartitions).toSeq == Seq(1L)),
+      ps.map(_.stateOperators.map(_.numShufflePartitions).toSeq))
+    assert(drainConfs == before)
+  }
+
+  test("an explicit spark.graft.streaming.statePartitions sets the drain's width") {
+    spark.conf.set("spark.graft.streaming.statePartitions", "3")
+    val ps = try progressOf("spec_width_pinned") {
+      Streams.runTumblingAgg(spark, s"$sf/events.parquet", "ts", "1 hour",
+        Seq("event_type"), Seq(count(lit(1)).as("n")), queryName = "spec_width_pinned")
+    } finally spark.conf.unset("spark.graft.streaming.statePartitions")
+    assert(ps.nonEmpty)
+    assert(ps.forall(_.stateOperators.map(_.numShufflePartitions).toSeq == Seq(3L)))
+  }
+
+  test("a drain restores the session's width and no-data-batch confs when start() throws") {
+    val before = drainConfs
+    assert(!before.contains(NoData) && before.contains("spark.sql.shuffle.partitions"))
+    // a query holding the drain's name makes the drain's start() throw
+    implicit val sqlCtx = spark.sqlContext
+    val held = MemoryStream[Int].toDF().writeStream
+      .format("memory").queryName("spec_held").start()
+    try {
+      val e = intercept[IllegalArgumentException] {
+        Streams.runStreamingDedup(spark, s"$sf/events.parquet", "ts", "1 hour",
+          Seq("user_id", "event_type"), queryName = "spec_held")
+      }
+      assert(e.getMessage.contains("already active"), e.getMessage)
+    } finally held.stop()
+    assert(drainConfs == before)
+  }
+
+  test("bounded interval-join and dedup drains commit one batch and equal the batch answer") {
+    val ev = s"$sf/events.parquet"
+    var joined: Array[(Long, Long, Long)] = Array.empty
+    val joinBatches = progressOf("spec_one_join") {
+      joined = Streams.runStreamIntervalJoin(spark, ev, "ts", "event_type",
+          "user_id", "event_id", "click", "purchase", "1 hour", queryName = "spec_one_join")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    }.map(_.batchId).distinct
+    assert(joinBatches == Seq(0L), joinBatches)
+    val events = Engine.table(spark, sf, "events")
+    val clicks = events.filter(col("event_type") === "click")
+      .select(col("event_id").as("l"), col("user_id").as("k"), col("ts").as("lts"))
+    val buys = events.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("r"), col("user_id").as("rk"), col("ts").as("rts"))
+    val want = clicks.join(buys, col("k") === col("rk") && col("rts") >= col("lts") &&
+        col("rts") <= col("lts") + expr("INTERVAL 1 hour"))
+      .select("l", "r", "k").collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(want.nonEmpty)
+    assert(joined.sorted.toSeq == want.sorted.toSeq)
+
+    var deduped: Array[(Long, String)] = Array.empty
+    val dedupBatches = progressOf("spec_one_dedup") {
+      deduped = Streams.runStreamingDedup(spark, ev, "ts", "1 hour",
+          Seq("user_id", "event_type"), queryName = "spec_one_dedup")
+        .collect().map(r => (r.getLong(0), r.getString(1)))
+    }.map(_.batchId).distinct
+    assert(dedupBatches == Seq(0L), dedupBatches)
+    val distinct = events.select("user_id", "event_type").distinct().collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(deduped.sorted.toSeq == distinct.sorted.toSeq)
+  }
 
   test("batch tumble assigns epoch-aligned windows") {
     val df = Seq(
@@ -297,12 +403,18 @@ class StreamingSpec extends SparkSpec {
       .select(col("event_id"), timestamp_seconds(col("epoch")).as("ts"),
         col("user_id"), col("event_type"))
       .write.mode("overwrite").parquet(s"$dir/events")
-    val out = graft.streaming.Streams.runStreamIntervalLeftJoin(
-      spark, s"$dir/events", "ts", "event_type", "user_id", "event_id",
-      "click", "purchase", "1 hour", queryName = "ljoin_spec")
-    val rows = out.collect()
-      .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
-      .toSet
+    var rows = Set.empty[(Long, Option[Long])]
+    // the null-padded rows flush in the no-data batch that follows the
+    // sentinel's watermark advance, so this drain keeps that batch
+    val batches = progressOf("ljoin_spec") {
+      rows = graft.streaming.Streams.runStreamIntervalLeftJoin(
+          spark, s"$dir/events", "ts", "event_type", "user_id", "event_id",
+          "click", "purchase", "1 hour", queryName = "ljoin_spec")
+        .collect()
+        .map(r => (r.getLong(0), Option(r.get(1)).map(_.asInstanceOf[Long])))
+        .toSet
+    }.map(_.batchId).distinct
+    assert(batches.size == 2, batches)
     assert(rows == Set((1L, Some(2L)), (3L, None), (5L, None)))
   }
 
