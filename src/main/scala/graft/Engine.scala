@@ -50,10 +50,15 @@ object Engine {
       // testdata events.parquet uses TIMESTAMP(NANOS) which Spark's
       // vectorized reader rejects; read as long and convert (table()).
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // no streaming state width here: each Streams drain sizes its
-      // stateful operators from the bytes it streams
-      // (Streams.withStatePartitions); SPARK_GRAFT_CONF
-      // spark.graft.streaming.statePartitions=N pins a width instead.
+      // local-profile streaming state width (see
+      // Streams.withStatePartitions): stateful operators pin
+      // shuffle.partitions at query start and pay a state-store init +
+      // commit per partition per micro-batch, whatever it holds. The
+      // local drains hold a few thousand keys, so one partition (at 8,
+      // state commits took 1.55 s of a stream_drain op's 3.62 s task
+      // time). On a cluster, override to O(total executor cores) via
+      // SPARK_GRAFT_CONF — same scaling rule as shuffle.partitions.
+      .config("spark.graft.streaming.statePartitions", "1")
       // r11 (guide §2.2 "M×R block growth"): force the sort-based
       // shuffle writer (UnsafeShuffleWriter — one sorted file + index
       // per MAP task) instead of BypassMergeSortShuffleWriter, which

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import org.apache.spark.sql.types.StructType
 
@@ -49,21 +48,18 @@ object Streams {
     df.withWatermark(timeCol, maxDiff)
 
 
-  /** Runs `start` (a streaming query's start) under the width and
-    * batch policy of a drain over `input`, restoring the session's
-    * values afterwards, also when `start` throws.
+  /** Runs `start` (a streaming query's start) under a drain's width
+    * and batch policy, restoring the session's values afterwards, also
+    * when `start` throws.
     *
     * Width: stateful operators inherit `spark.sql.shuffle.partitions`
     * at QUERY START and pin it in the checkpoint, and every state-store
     * partition pays a provider init and a commit per micro-batch
-    * whatever it holds. So the width follows the bytes the query
-    * streams (a Hadoop listing of `input`):
-    * `ceil(bytes / spark.sql.adaptive.advisoryPartitionSizeInBytes)`,
-    * clamped to [1, defaultParallelism] — the size AQE coalesces batch
-    * shuffles toward, applied once at start because a stateful width
-    * cannot change later. A KB-to-MB drain runs at width 1. An explicit
-    * `spark.graft.streaming.statePartitions` (e.g. through
-    * SPARK_GRAFT_CONF) wins; `=8` reproduces the former constant.
+    * whatever it holds. `spark.graft.streaming.statePartitions` (set in
+    * Engine.session's local profile, override via SPARK_GRAFT_CONF)
+    * sizes state partitioning independently of the batch shuffle
+    * width; on a real cluster set it to O(executor cores), exactly like
+    * shuffle.partitions. Unset, the query keeps the session's width.
     *
     * `oneCommit`: the query's answer is final once its data batch
     * commits, so the no-data micro-batch that only evicts state under
@@ -74,19 +70,11 @@ object Streams {
     * The query clones the session conf at start, so restoring it
     * afterwards leaves the running query as started.
     */
-  private def withStatePartitions[T](spark: SparkSession, input: String,
+  private def withStatePartitions[T](spark: SparkSession,
                                      oneCommit: Boolean)(start: => T): T = {
-    val width = spark.conf.getOption("spark.graft.streaming.statePartitions")
-      .getOrElse {
-        val p = new org.apache.hadoop.fs.Path(input)
-        val bytes = p.getFileSystem(spark.sessionState.newHadoopConf())
-          .getContentSummary(p).getLength
-        val advisory = spark.sessionState.conf
-          .getConf(SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-        val cap = spark.sparkContext.defaultParallelism.toLong
-        math.max(1L, math.min(cap, (bytes + advisory - 1) / advisory)).toString
-      }
-    val scoped = ("spark.sql.shuffle.partitions" -> width) +:
+    val scoped =
+      spark.conf.getOption("spark.graft.streaming.statePartitions")
+        .map("spark.sql.shuffle.partitions" -> _).toSeq ++
       (if (oneCommit) Seq("spark.sql.streaming.noDataMicroBatches.enabled" -> "false")
        else Nil)
     val explicit = spark.sessionState.conf.getAllConfs
@@ -105,9 +93,9 @@ object Streams {
     * table as a batch DataFrame.
     */
   private def drain(spark: SparkSession, out: DataFrame, mode: String,
-                    queryName: String, input: String, oneCommit: Boolean = false,
+                    queryName: String, oneCommit: Boolean = false,
                     check: StreamingQuery => Unit = _ => ()): DataFrame = {
-    val q = withStatePartitions(spark, input, oneCommit)(out.writeStream
+    val q = withStatePartitions(spark, oneCommit)(out.writeStream
       .outputMode(mode)
       .format("memory")
       .queryName(queryName)
@@ -158,7 +146,7 @@ object Streams {
     // sink (kafka/delta/parquet), where state and output stay
     // partitioned across executors; only the drain differs, the
     // windowed-aggregation plan is identical.
-    drain(spark, grouped, "complete", queryName, path)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming count-min sketch: per tumbling window, the depth×width
@@ -185,7 +173,7 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    drain(spark, cells, "complete", queryName, path)
+    drain(spark, cells, "complete", queryName)
   }
 
   /** Streaming per-window value-bucket counts — the stateful half of
@@ -211,7 +199,7 @@ object Streams {
       .agg(count(lit(1)).as("cc"))
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    drain(spark, cur, "complete", queryName, path)
+    drain(spark, cur, "complete", queryName)
   }
 
   /** Streaming per-window DISTINCT counts (the windowed-DAU shape):
@@ -239,7 +227,7 @@ object Streams {
       .agg(count(lit(1)).as("n_distinct"))
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    drain(spark, grouped, "complete", queryName, path, oneCommit = true)
+    drain(spark, grouped, "complete", queryName, oneCommit = true)
   }
 
   /** Streaming top-k (the trending-items shape): per-key counts
@@ -258,7 +246,7 @@ object Streams {
       .agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col(keyCol))
       .limit(k)
-    drain(spark, ranked, "complete", queryName, path)
+    drain(spark, ranked, "complete", queryName)
   }
 
   /** Streaming HOPPING-window aggregation — `window(timeCol, len,
@@ -280,7 +268,7 @@ object Streams {
       .agg(aggs.head, aggs.tail: _*)
       .withColumn("window_start", col("window.start"))
       .drop("window")
-    drain(spark, grouped, "complete", queryName, path)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming SESSION-window aggregation over a parquet file/dir —
@@ -304,7 +292,7 @@ object Streams {
       .withColumn("session_start", col("sw.start"))
       .withColumn("session_end", col("sw.end"))
       .drop("sw")
-    drain(spark, grouped, "complete", queryName, path)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** One typed side of a stream-stream join: filter `typeCol ===
@@ -354,7 +342,7 @@ object Streams {
         col("rts") >= col("lts") &&
         col("rts") <= col("lts") + expr(s"INTERVAL $within"))
       .select(col("left_id"), col("right_id"), col("k"))
-    drain(spark, joined, "append", queryName, path, oneCommit = true)
+    drain(spark, joined, "append", queryName, oneCommit = true)
   }
 
   /** Stream-stream interval LEFT OUTER join: like
@@ -431,7 +419,7 @@ object Streams {
     // the st8/st11 drain from 4 batches to 2 with byte-identical
     // filtered output.
     sentinel(0L)
-    val drained = try drain(spark, joined, "append", queryName, stage)
+    val drained = try drain(spark, joined, "append", queryName)
     finally {
       // the memory sink owns the drained rows — the staged copy of the
       // input is dead weight; delete it so repeated drains (bench
@@ -472,7 +460,7 @@ object Streams {
     val joined = src.join(broadcast(dim), col(streamKey) === dim(dimKey))
     val grouped = joined.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    drain(spark, grouped, "complete", queryName, path)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming decontamination: stream-static LEFT ANTI join against a
@@ -491,7 +479,7 @@ object Streams {
     val raw = fileStream(spark, path)
     val src = preFilter.map(raw.filter).getOrElse(raw)
     val out = src.join(broadcast(static), joinCols, "left_anti")
-    drain(spark, out, "append", queryName, path)
+    drain(spark, out, "append", queryName)
   }
 
   /** Streaming AS-OF dimension enrichment: each event joins the
@@ -522,7 +510,7 @@ object Streams {
         (dim(toCol).isNull || col(timeCol) < dim(toCol)))
     val grouped = joined.groupBy(groupCols.map(col): _*)
       .agg(aggs.head, aggs.tail: _*)
-    drain(spark, grouped, "complete", queryName, path)
+    drain(spark, grouped, "complete", queryName)
   }
 
   /** Streaming exact deduplication on `keyCols` over a parquet file/dir,
@@ -560,7 +548,7 @@ object Streams {
       .withWatermark(timeCol, delay)
       .dropDuplicatesWithinWatermark(keyCols)
       .select(keyCols.map(col): _*)
-    drain(spark, deduped, "append", queryName, path, oneCommit = true, check = { q =>
+    drain(spark, deduped, "append", queryName, oneCommit = true, check = { q =>
       val dataBatches = q.recentProgress.count(_.numInputRows > 0)
       if (dataBatches > 1)
         throw new IllegalStateException(
@@ -669,7 +657,7 @@ object Streams {
           state.update(LshBucketState(ids.toArray))
           out.iterator
       }
-    drain(spark, pairs.toDF(), "append", queryName, path)
+    drain(spark, pairs.toDF(), "append", queryName)
   }
 
   case class QuotaState(admitted: Long)
@@ -694,7 +682,7 @@ object Streams {
     val src = fileStream(spark, path)
       .select(keyExpr.cast("string").as("key"), idExpr.cast("long").as("id"))
       .as[(String, Long)]
-    drain(spark, quotaAdmitStream(src, k).toDF("key", "id"), "append", queryName, path)
+    drain(spark, quotaAdmitStream(src, k).toDF("key", "id"), "append", queryName)
   }
 
   /** Streaming GROUP BY on a union-typed (VARIANT) key (VERDICT r8
@@ -713,7 +701,7 @@ object Streams {
     val src = fileStream(spark, path).select(varExpr.as("v"))
     val agg = src.groupBy(col("v")).agg(count(lit(1)).as("n"))
       .select(to_json(col("v")).as("val_json"), col("n"))
-    drain(spark, agg, "complete", queryName, path)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** Stream-stream interval join on a UNION-TYPED key (VERDICT r9
@@ -752,7 +740,7 @@ object Streams {
         col("rts") <= col("lts") + expr(s"INTERVAL $within"))
       .select(col("left_id"), col("right_id"),
         to_json(col("lv")).as("val_json"))
-    drain(spark, joined, "append", queryName, path, oneCommit = true)
+    drain(spark, joined, "append", queryName, oneCommit = true)
   }
 
   /** Streaming DISTINCT on a union-typed column (the last union-typed
@@ -770,7 +758,7 @@ object Streams {
     val src = fileStream(spark, path).select(varExpr.as("v"))
     val distinctV = src.distinct()
       .select(to_json(col("v")).as("val_json"))
-    drain(spark, distinctV, "complete", queryName, path)
+    drain(spark, distinctV, "complete", queryName)
   }
 
   /** Streaming crawl-frontier dedup: every discovered URL surface form
@@ -794,7 +782,7 @@ object Streams {
       .where(col("canonical").isNotNull)
       .groupBy("canonical")
       .agg(count(lit(1)).as("n_docs"), min(col("id")).as("first_doc"))
-    drain(spark, agg, "complete", queryName, path)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** Streaming blocklist audit: the codegen'd Aho-Corasick kernel
@@ -819,7 +807,7 @@ object Streams {
       .agg(count(lit(1)).as("n_docs"),
         sum(when(col("hits") > 0, 1L).otherwise(0L)).as("n_flagged"),
         sum(col("hits")).as("n_occurrences"))
-    drain(spark, agg, "complete", queryName, path)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** The quota state machine, exposed for MemoryStream-based
@@ -957,7 +945,7 @@ object Streams {
                             queryName: String = "graft_fp"): DataFrame = {
     val agg = graft.operators.Layout.partitionFingerprints(
       fileStream(spark, path), partCol, col(contentCol))
-    drain(spark, agg, "complete", queryName, path)
+    drain(spark, agg, "complete", queryName)
   }
 
   /** One emitted row of a retraction-capable streaming outer join. */

@@ -43,7 +43,7 @@ class StreamingSpec extends SparkSpec {
     spark.sessionState.conf.getAllConfs.filter { case (k, _) =>
       k == "spark.sql.shuffle.partitions" || k == NoData }
 
-  test("a KB-scale drain runs its stateful operator at width 1") {
+  test("the local profile drains a stateful operator at width 1") {
     val before = drainConfs
     val ps = progressOf("spec_width") {
       Streams.runTumblingAgg(spark, s"$sf/events.parquet", "ts", "1 hour",
@@ -56,11 +56,13 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("an explicit spark.graft.streaming.statePartitions sets the drain's width") {
-    spark.conf.set("spark.graft.streaming.statePartitions", "3")
+    val key = "spark.graft.streaming.statePartitions"
+    val old = spark.conf.get(key)
+    spark.conf.set(key, "3")
     val ps = try progressOf("spec_width_pinned") {
       Streams.runTumblingAgg(spark, s"$sf/events.parquet", "ts", "1 hour",
         Seq("event_type"), Seq(count(lit(1)).as("n")), queryName = "spec_width_pinned")
-    } finally spark.conf.unset("spark.graft.streaming.statePartitions")
+    } finally spark.conf.set(key, old)
     assert(ps.nonEmpty)
     assert(ps.forall(_.stateOperators.map(_.numShufflePartitions).toSeq == Seq(3L)))
   }
